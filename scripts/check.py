@@ -5,8 +5,9 @@ Usage: scripts/check.py <sfDir> <verifyOutDir>
   1. expects `sbt "runMain graft.Verify <sfDir> <outDir>"` was already run
   2. registers each testdata parquet as a DuckDB view named after the table
   3. runs every oracle_sql.json query and compares against the Spark parquet
-     dump: row count, schema (column names), and exact values with columns
-     sorted by name (mirrors the driver's hash-compare).
+     dump: Verify error marker, column names, column types (as DuckDB reads
+     each side), row count, and exact values with columns sorted by name
+     (mirrors the driver's hash-compare, which is type-sensitive).
 """
 import json, sys, glob, os
 import duckdb
@@ -24,6 +25,10 @@ def fresh_con(sf_dir):
         name = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
     return con
+
+def col_types(rel):
+    """{column: DuckDB type name} of a relation; binds, does not execute."""
+    return dict(zip(rel.columns, (str(t) for t in rel.types)))
 
 def run_oracle_isolated(sf_dir, sql):
     """Run one oracle in a child python (fresh address space) and ship
@@ -59,12 +64,22 @@ def main():
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     failures = 0
     for name, sql in sorted(oracle.items()):
-        spark_files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
+        marker = os.path.join(out_dir, name + ".error")
+        if os.path.exists(marker):
+            # Verify failed this query; a parquet dump left by an earlier
+            # run must not pass in its place
+            print(f"FAIL {name}: verify error marker: "
+                  f"{open(marker).read().strip()}")
+            failures += 1; continue
+        spark_files = sorted(glob.glob(os.path.join(out_dir, name, "*.parquet")))
         if not spark_files:
             print(f"FAIL {name}: no spark result parquet"); failures += 1; continue
-        got = pd.concat([pd.read_parquet(f) for f in sorted(spark_files)])
+        got = pd.concat([pd.read_parquet(f) for f in spark_files])
         con = fresh_con(sf_dir)
         try:
+            got_types = col_types(
+                con.sql(f"SELECT * FROM read_parquet({spark_files!r})"))
+            exp_types = col_types(con.sql(sql))
             exp = con.execute(sql).df()
         except Exception as e:
             if "Out of Memory" in str(e):
@@ -89,6 +104,15 @@ def main():
         exp = exp.reindex(sorted(exp.columns), axis=1).reset_index(drop=True)
         if list(got.columns) != list(exp.columns):
             print(f"FAIL {name}: columns {list(got.columns)} vs {list(exp.columns)}")
+            failures += 1; continue
+        # The driver's hash is type-sensitive (q79/q80 once matched value
+        # for value but failed on an uncast HUGEINT window sum), while the
+        # pandas compare below is not (int64 1 == float64 1.0, Decimal
+        # 1.5 == 1.5) — so a type mismatch fails here.
+        bad_types = [(c, got_types[c], exp_types[c]) for c in got.columns
+                     if got_types[c] != exp_types[c]]
+        if bad_types:
+            print(f"FAIL {name}: types (col, spark, oracle) {bad_types}")
             failures += 1; continue
         if len(got) != len(exp):
             print(f"FAIL {name}: rows {len(got)} vs {len(exp)}"); failures += 1; continue

@@ -219,11 +219,12 @@ object ArtifactStore {
     * unsplittable file — fix at the source"). The relational testdata
     * tables ship as ONE parquet row group at every scale factor, so a
     * scan is exactly one task and every stage fused into it runs
-    * serial; the r17/r18 `Tables.fanOut` exchange treats that symptom
+    * serial; a round-robin exchange after the read (kept only for the
+    * uncompacted corpus, [[Tables.documentsPar]]) treats that symptom
     * per consumer (decode stays serial, and each consumer pays a
-    * round-robin shuffle of the scanned rows). Compaction fixes the
-    * layout once per corpus generation: an EXACT row-for-row copy of
-    * the source, laid out in [[compactFileCount]] part files so
+    * shuffle of the scanned rows). Compaction fixes the layout once per
+    * corpus generation: an EXACT row-for-row copy of the source, laid
+    * out in [[compactFileCount]] part files so
     * Spark's own split math parallelizes every later scan and the
     * per-consumer exchange disappears. Measured (solo quiet A/B at
     * sf0.1, this round, raw → compacted): q22 1.36→0.48, q04
@@ -281,18 +282,13 @@ object ArtifactStore {
       math.min(16L, math.max(1L, ceilDiv(bytes, 256L << 10)))).toInt
   }
 
-  /** (dataDir → part-file count) for published compacted generations —
-    * immutable once published, so a plain memo is safe. */
-  private val compactFiles = new ConcurrentHashMap[String, Integer]()
-
-  /** The compacted generation of `table` under `dir`: (served frame,
-    * part-file count). Builds once per (table, content-fp) — one read
+  /** The compacted generation of `table` under `dir`. Builds once per (table, content-fp) — one read
     * of the source, one round-robin repartition, one write — then
     * every call serves the published files. The schema is the source
     * schema verbatim (no added columns), so consumers are unaware of
     * the tier. */
   def compactedTable(s: SparkSession, dir: String,
-                     table: String): (DataFrame, Int) = {
+                     table: String): DataFrame = {
     val fp = tableFullRowFp(s, dir, table)
     val key = s"compact_${table}_v1"
     val dataDir = publishOnce(s, key, fp) { tmp =>
@@ -301,10 +297,7 @@ object ArtifactStore {
         .repartition(compactFileCount(bytes))
         .write.mode("overwrite").parquet(tmp.resolve("data").toString)
     }
-    val n = compactFiles.computeIfAbsent(dataDir, { d: String =>
-      Integer.valueOf(partFileCount(Paths.get(d)))
-    }).intValue
-    (s.read.parquet(dataDir), n)
+    s.read.parquet(dataDir)
   }
 
   // ------------------------------------------------------------ store
@@ -375,26 +368,9 @@ object ArtifactStore {
     * truncated at a file source, never pinned executor memory), and carries the
     * fingerprint as column `fp`. */
   def parquetOnce(s: SparkSession, key: String, fp: Long)
-                 (build: => DataFrame): DataFrame =
-    parquetOnceImpl(s, key, fp, Seq.empty)(build)
-
-  /** [[parquetOnce]] with the data laid out hive-partitioned by
-    * `partitionCols` — for artifacts whose consumers prune by a key
-    * column per read (the ANN serve cells: each micro-batch reads only
-    * its probed cells' directories). Partition columns come back
-    * integer-typed from directory-name inference; consumers re-cast. */
-  def parquetOncePartitioned(s: SparkSession, key: String, fp: Long,
-                             partitionCols: Seq[String])
-                            (build: => DataFrame): DataFrame =
-    parquetOnceImpl(s, key, fp, partitionCols)(build)
-
-  private def parquetOnceImpl(s: SparkSession, key: String, fp: Long,
-                              partitionCols: Seq[String])
-                             (build: => DataFrame): DataFrame = {
+                 (build: => DataFrame): DataFrame = {
     val dataDir = publishOnce(s, key, fp) { tmp =>
-      val w = build.withColumn("fp", lit(fp)).write
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
-       else w)
+      build.withColumn("fp", lit(fp)).write
         .mode("overwrite").parquet(tmp.resolve("data").toString)
     }
     s.read.parquet(dataDir)

@@ -2,16 +2,18 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
-/** Task-metric accumulation for Bench: shuffle bytes written and spill
-  * across all tasks since the last [[reset]]. Listener events are
-  * asynchronous; [[settle]] polls until the counters stop moving, which
-  * is accurate enough for per-query attribution in a single-JVM bench
-  * (queries run strictly sequentially). */
+/** Listener accumulation for Bench: shuffle bytes written and spill
+  * across all tasks, and the summed wall time of completed stages, since
+  * the last [[reset]]. Listener events are asynchronous; [[settle]] polls
+  * until the counters stop moving, which is accurate enough for
+  * per-query attribution in a single-JVM bench (queries run strictly
+  * sequentially). */
 class BenchMetrics extends SparkListener {
   private val shuffleWrite = new LongAdder
   private val spill = new LongAdder
+  private val stageWallMs = new LongAdder
 
   override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
     val m = taskEnd.taskMetrics
@@ -21,18 +23,26 @@ class BenchMetrics extends SparkListener {
     }
   }
 
-  def reset(): Unit = { shuffleWrite.reset(); spill.reset() }
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+    for (a <- sc.stageInfo.completionTime; b <- sc.stageInfo.submissionTime)
+      stageWallMs.add(a - b)
+
+  def reset(): Unit = { shuffleWrite.reset(); spill.reset(); stageWallMs.reset() }
+
+  private def read(): (Long, Long, Long) =
+    (shuffleWrite.sum(), spill.sum(), stageWallMs.sum())
 
   /** Wait for the async listener bus to quiesce (counters unchanged for
-    * two consecutive polls), then return (shuffleBytes, spillBytes). */
-  def settle(): (Long, Long) = {
-    var prev = (-1L, -1L)
-    var cur = (shuffleWrite.sum(), spill.sum())
+    * two consecutive polls), then return (shuffleBytes, spillBytes,
+    * stageWallMs). */
+  def settle(): (Long, Long, Long) = {
+    var prev = (-1L, -1L, -1L)
+    var cur = read()
     var i = 0
     while (cur != prev && i < 50) {
       prev = cur
       Thread.sleep(50)
-      cur = (shuffleWrite.sum(), spill.sum())
+      cur = read()
       i += 1
     }
     cur

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection tool: `runMain graft.Explain <queryName> [sfDir]`
   * prints the formatted physical plan for any registered query (all of
   * them with no args). Used to audit the scale checklist per operator:
@@ -12,24 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Let AQE re-plan (coalesce) over cached/persisted frames: the
-      // default-false compatibility flag pins every stage over a
-      // persisted relation to the static shuffle-partition count, which
-      // turns iterative analytics over persisted graphs (q91/q125/
-      // q148/q154) into fleets of near-empty tasks — measured 6.8 s ->
-      // 4.2 s on q91 at sf0.1. Values are unaffected; only partition
-      // counts adapt to data size, which is the 100 TB posture anyway.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val names = args.headOption match {
       case Some("all") | None => SparkEntry.queries.keys.toSeq.sorted
       case Some(n) => n.split(",").toSeq

@@ -7,9 +7,8 @@ import graft.functions.{BloomProbe, BpeEncode, BpeEncodeTbl, DotProduct, Hash60E
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.{BinaryType, IntegerType}
 
-/** Engine extension point, installed with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (or
-  * `SparkSession.builder.withExtensions`). Registers the engine's native
+/** Engine extension point, installed by [[Session.local]] with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`. Registers the engine's native
   * Catalyst expressions so they are usable from both the Column API
   * (`call_function`) and plain SQL.
   */

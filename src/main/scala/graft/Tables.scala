@@ -16,10 +16,8 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    compactServed(spark, sfDir, table) match {
-      case Some((df, _)) => df
-      case None => spark.read.parquet(s"$sfDir/$table.parquet")
-    }
+    compactServed(spark, sfDir, table)
+      .getOrElse(spark.read.parquet(s"$sfDir/$table.parquet"))
 
   /** The compacted serving decision for (dir, table) — Some when the
     * raw layout caps scan parallelism below half the session's cores
@@ -31,7 +29,7 @@ object Tables {
     * the None branch: the tier exists exactly when, and only when, the
     * input cannot parallelize itself. */
   private def compactServed(s: SparkSession, d: String,
-                            table: String): Option[(DataFrame, Int)] = {
+                            table: String): Option[DataFrame] = {
     if (!ArtifactStore.compactableTables(table)) return None
     val path = s"$d/$table.parquet"
     val rg = rowGroups(s, path)
@@ -59,13 +57,13 @@ object Tables {
     * query downstream sees one type:
     *
     *  - parquet TIMESTAMP(NANOS), which Spark's reader rejects unless
-    *    `spark.sql.legacy.parquet.nanosAsLong=true` (set in every session
-    *    builder here). The column arrives as nano-epoch `long`; truncate
+    *    `spark.sql.legacy.parquet.nanosAsLong=true` (set by
+    *    [[Session.local]]). The column arrives as nano-epoch `long`; truncate
     *    to micros — the same truncation DuckDB applies reading
     *    TIMESTAMP_NS as TIMESTAMP.
     *  - parquet timestamp[us] without timezone metadata, which Spark
-    *    reads as TIMESTAMP_NTZ. The session timezone is pinned to UTC in
-    *    every builder, so the NTZ→TZ cast reinterprets the same wall
+    *    reads as TIMESTAMP_NTZ. The session timezone is pinned to UTC by
+    *    [[Session.local]], so the NTZ→TZ cast reinterprets the same wall
     *    clock at identical micros — exactly DuckDB's TIMESTAMP read.
     */
   def events(s: SparkSession, d: String): DataFrame = {
@@ -105,50 +103,28 @@ object Tables {
     * granularity, so a table written as a single row group yields ONE
     * non-empty scan task no matter how many cores the session has —
     * every downstream row-local expression fused into that scan stage
-    * (decimal aggregation, regex, hashing, tokenize) runs serial. For
-    * compute-heavy consumers this rebalances the column-pruned rows
-    * once after the read so the expensive work parallelizes.
+    * (regex, hashing, tokenize) runs serial. For compute-heavy
+    * consumers this rebalances the column-pruned rows once after the
+    * read so the expensive work parallelizes.
     *
-    * SCALE-ADAPTIVE, decided from the file's own footer metadata: it
-    * fires only when the layout caps scan parallelism below half the
-    * session's cores (a production-scale table carries hundreds of row
-    * groups and takes the no-op branch — the exchange exists exactly
-    * when, and only when, the input cannot parallelize itself).
-    * Catalyst pushes filters and column pruning through the
-    * round-robin exchange, so the scan's PushedFilters/ReadSchema are
-    * unchanged; use only under order-insensitive consumers (full
-    * aggregations / joins — every declared query's output is sorted).
+    * Only `documents` needs it: the relational tables are served by the
+    * compaction tier ([[load]]), which splits an unsplittable input at
+    * build time, while the corpus stays raw by design
+    * ([[ArtifactStore.compactedTable]]). SCALE-ADAPTIVE, decided from
+    * the file's own footer metadata: it fires only when the row groups
+    * cap scan parallelism below a quarter of the session's cores (a
+    * production-scale corpus carries hundreds of row groups and takes
+    * the no-op branch). Catalyst pushes filters and column pruning
+    * through the round-robin exchange, so the scan's PushedFilters/
+    * ReadSchema are unchanged; use only under order-insensitive
+    * consumers (full aggregations / joins — every declared query's
+    * output is sorted). Sites where this rebalance measured slower
+    * carry a `fanOut MEASURED` note.
     */
-  def fanOut(s: SparkSession, d: String, table: String,
-             df: DataFrame): DataFrame = {
+  def documentsPar(s: SparkSession, d: String): DataFrame = {
     val cores = s.sparkContext.defaultParallelism
-    // When the table is served compacted, the scan already splits into
-    // ~one task per part file — the exchange only pays when even that
-    // layout caps parallelism below a QUARTER of the cores (measured:
-    // an 11-file orders scan feeding the cube/grouping-sets expand
-    // needs no rebalance, while a raw single-row-group scan always
-    // does; the r18 half-the-cores floor predates the compaction tier
-    // and over-fired on compacted layouts).
-    val units = compactServed(s, d, table) match {
-      case Some((_, nFiles)) => nFiles
-      case None => rowGroups(s, s"$d/$table.parquet")
-    }
+    val units = rowGroups(s, s"$d/documents.parquet")
+    val df = documents(s, d)
     if (units > 0 && units < math.max(2, cores / 4)) df.repartition(cores) else df
   }
-
-  /** [[lineitem]] rebalanced for compute-heavy consumers ([[fanOut]]). */
-  def lineitemPar(s: SparkSession, d: String): DataFrame =
-    fanOut(s, d, "lineitem", lineitem(s, d))
-
-  /** [[documents]] rebalanced for compute-heavy consumers ([[fanOut]]). */
-  def documentsPar(s: SparkSession, d: String): DataFrame =
-    fanOut(s, d, "documents", documents(s, d))
-
-  /** [[orders]] rebalanced for compute-heavy consumers ([[fanOut]]). */
-  def ordersPar(s: SparkSession, d: String): DataFrame =
-    fanOut(s, d, "orders", orders(s, d))
-
-  /** [[events]] rebalanced for compute-heavy consumers ([[fanOut]]). */
-  def eventsPar(s: SparkSession, d: String): DataFrame =
-    fanOut(s, d, "events", events(s, d))
 }

@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Let AQE re-plan (coalesce) over cached/persisted frames: the
-      // default-false compatibility flag pins every stage over a
-      // persisted relation to the static shuffle-partition count, which
-      // turns iterative analytics over persisted graphs (q91/q125/
-      // q148/q154) into fleets of near-empty tasks — measured 6.8 s ->
-      // 4.2 s on q91 at sf0.1. Values are unaffected; only partition
-      // counts adapt to data size, which is the 100 TB posture anyway.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated subset for local iteration (mirrors
     // Bench's SPARK_GRAFT_BENCH_ONLY); the driver sets nothing and
@@ -33,7 +14,7 @@ object Verify {
     // A throwing query must leave a durable trace, not just a stderr line:
     // r3's q90 died here and silently vanished from the correctness
     // artifact (no parquet => no entry). Each failure writes a
-    // $outDir/$name.error marker (check_oracle.py and the driver's
+    // $outDir/$name.error marker (scripts/check.py and the driver's
     // missing-parquet path both turn it into a red entry) and the full
     // list is echoed to stdout at the end.
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]

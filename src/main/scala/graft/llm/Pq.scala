@@ -39,7 +39,7 @@ object Pq {
     // ONE native node carrying the books as a plan-literal spec
     // (graft.functions.PqXhat): the composed per-subspace argmin trees
     // cost ~0.5 s of driver planning/codegen per execution (q64's
-    // PlanCost reading — the q164/q129 pathology); arithmetic is
+    // driver-share reading — the q164/q129 pathology); arithmetic is
     // bit-identical to the old form, and reconstructSql stays its
     // DuckDB twin.
     call_function("graft_pq_xhat", v,

@@ -40,10 +40,6 @@ object VectorOps {
   /** Cosine similarity; same operation tree as DuckDB list_cosine_similarity. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** DuckDB SQL for the same cosine (exact bitwise match). */
-  def cosineSql(a: String, b: String): String =
-    s"list_cosine_similarity($a::DOUBLE[], $b::DOUBLE[])"
-
   /** Sign-LSH bucket id from the signs of the first `bits` components:
     * bucket = Σ_{j<bits} (v[j] > 0) << j. Axis-aligned random-hyperplane
     * LSH; deterministic, SQL-expressible, and the constant-recall scale

@@ -418,7 +418,6 @@ object CurationQueries {
     val lens = docs.select(col("doc_id"), size(col("w")).cast(LongType).as("dl"))
     val stats = lens.agg(count(lit(1)).as("n"),
       (sum(col("dl")).cast(DoubleType) / count(lit(1)).cast(DoubleType)).as("avgdl"))
-    val qt = QueryTerms.map(lit(_))
     val postings = docs
       .select(col("doc_id"), explode(col("w")).as("t"))
       .where(col("t").isin(QueryTerms: _*))

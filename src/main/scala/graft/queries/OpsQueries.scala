@@ -118,11 +118,7 @@ object OpsQueries {
     * per-column rank; the null/row counts are plain partial aggregates.
     */
   def columnProfile(s: SparkSession, dir: String): DataFrame = {
-    // persist: four profiled columns × three arms each (null counts,
-    // KMV sketch, exact-distinct truth) = twelve consumers of the same
-    // scan — unpersisted, every arm re-reads and re-normalizes the
-    // table (r18 solo A/B in the ledger)
-    val ev = Tables.events(s, dir).persist()
+    val ev = Tables.events(s, dir)
     def one(name: String, c: Column): DataFrame = {
       val base = ev.select(c.cast("string").as("v"))
       val counts = base.agg(count(lit(1)).as("n"),

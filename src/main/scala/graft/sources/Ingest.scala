@@ -39,7 +39,4 @@ object Ingest {
       // instead of an ANSI index error; F1's null-drop then removes it.
       .select(get(rec, lit(0)).as("Label"), get(rec, lit(1)).as("Tweet"))
   }
-
-  /** Batch variant for already-split records (tests, replay files). */
-  def fromRecords(df: DataFrame): DataFrame = df.toDF("Label", "Tweet")
 }

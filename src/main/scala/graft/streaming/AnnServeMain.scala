@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
@@ -30,15 +29,7 @@ object AnnServeMain {
     val outDir = args.lift(1).getOrElse("/tmp/graft_ann_serve")
     val host = args.lift(2).getOrElse("localhost")
     val port = args.lift(3).map(_.toInt).getOrElse(6200)
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(Runtime.getRuntime.availableProcessors, 32)}]")
-      .config("spark.sql.shuffle.partitions",
-        math.min(Runtime.getRuntime.availableProcessors, 32))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val queries = graft.sources.Ingest.socketLines(spark, host, port)
       .select(from_json(col("value"), QuerySchema).as("q"))
       .where(col("q").isNotNull && col("q.query_id").isNotNull)

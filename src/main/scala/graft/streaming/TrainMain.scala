@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.Ingest
 
 /** Runnable end-to-end demo of the reference workload on this engine:
@@ -23,17 +21,8 @@ object TrainMain {
     // SPARK_GRAFT_CPUS=2 reproduces the reference's local[2] exactly
     // (1 core receiver + 1 core tasks, BASELINE.md) for a like-for-like
     // throughput comparison.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.defaultCores
+    val spark = graft.Session.local(cpus)
 
     // synthesize envelope files: label 4 iff the doc mentions "fast",
     // a learnable signal over the synthetic vocabulary. One file per

@@ -28,10 +28,6 @@ object Quality {
     element_at(call_function("graft_stop_len", w), 1)
       .cast(DoubleType) / size(w)
 
-  def meanTokenLen(w: Column): Column =
-    element_at(call_function("graft_stop_len", w), 2)
-      .cast(DoubleType) / size(w)
-
   /** Bounded composite: rewards vocabulary diversity, penalizes
     * stop-word soup, saturates the length reward at 100 tokens. */
   def score(w: Column): Column =

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * EXACT row-for-row copy laid out in multiple part files (so scans
   * parallelize), keyed by a full-row content fingerprint, built once
   * and reused across sessions; tables below the size floor (or with a
-  * healthy multi-row-group layout) stay raw; `Tables.fanOut` no-ops
-  * when the compacted layout already splits wide enough.
+  * healthy multi-row-group layout) stay raw.
   */
 class CompactSpec extends SparkSpec {
 
@@ -81,8 +80,7 @@ class CompactSpec extends SparkSpec {
     } finally deleteDir(Paths.get(dir))
   }
 
-  test("eligible table: compacted copy equals the source row-for-row, " +
-    "builds once, splits the scan, and fanOut no-ops") {
+  test("eligible table: compacted copy equals the source, builds once, splits the scan") {
     val dir = syntheticLineitemDir(40000)
     val raw = spark.read.parquet(s"$dir/lineitem.parquet")
     assume(Files.size(Paths.get(dir, "lineitem.parquet")) >= (512L << 10),
@@ -97,11 +95,6 @@ class CompactSpec extends SparkSpec {
       // the layout actually splits the scan
       assert(served.rdd.getNumPartitions > 1,
         s"compacted scan must parallelize (got ${served.rdd.getNumPartitions})")
-      // fanOut sees the split layout and keeps the plan exchange-free
-      val parPlan = Tables.lineitemPar(spark, dir)
-        .queryExecution.executedPlan.toString.toLowerCase
-      assert(!parPlan.contains("roundrobin"),
-        s"fanOut must no-op over a compacted layout:\n${parPlan.take(600)}")
       // a second session (fresh memo) reuses the published generation
       val builds0 = ArtifactStore.buildCount
         .getOrDefault("compact_lineitem_v1", 0)

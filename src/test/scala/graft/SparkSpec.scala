@@ -4,20 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs — one JVM-wide session (getOrCreate)
-  * configured exactly like Verify/Bench, including the engine extensions.
+/** Shared local SparkSession for specs — one JVM-wide session, the same
+  * [[Session.local]] configuration Verify and Bench run under, at two
+  * cores.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    // AQE over cached plans — mirror Verify/Bench (see Bench.scala)
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(2)
 
   /** sf0.001 testdata — smallest scale, for specs that read real tables. */
   val sfDir = "/root/testdata/sf0.001"

@@ -21,23 +21,6 @@ object Metrics {
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("label"), col("prediction"))
 
-  /** One-row frame: accuracy, precision, recall, f1, mse for the positive
-    * class (1.0). Ratios of conditional counts; `when` guards 0/0 → 0. */
-  def binary(scored: DataFrame,
-             labelCol: String = "target",
-             predCol: String = "prediction"): DataFrame = {
-    val l = col(labelCol); val p = col(predCol)
-    val tp = sum(when(l === 1.0 && p === 1.0, 1L).otherwise(0L))
-    val fp = sum(when(l === 0.0 && p === 1.0, 1L).otherwise(0L))
-    val fn = sum(when(l === 1.0 && p === 0.0, 1L).otherwise(0L))
-    scored.agg(
-      avg(when(l === p, 1.0).otherwise(0.0)).as("accuracy"),
-      (tp.cast("double") / greatest(tp + fp, lit(1L))).as("precision"),
-      (tp.cast("double") / greatest(tp + fn, lit(1L))).as("recall"),
-      (lit(2.0) * tp / greatest(lit(2L) * tp + fp + fn, lit(1L))).as("f1"),
-      avg(pow(l - p, 2)).as("mse"))
-  }
-
   /** Multiclass accuracy + per-class precision/recall/F1 (one row per
     * class, macro-averageable), all from a single confusion aggregation —
     * A3 generalized past the binary label set. */
@@ -71,13 +54,42 @@ object Metrics {
   case class BinaryMetrics(accuracy: Double, precision: Double,
                            recall: Double, f1: Double, mse: Double)
 
-  /** Collapse the one-row aggregate to a case class (driver receives five
-    * doubles — the only data that ever leaves the executors). */
+  /** Confusion counts collected to the driver as (label, prediction,
+    * count) cells, at most four for a binary label set. Unordered: no
+    * sort job, unlike [[confusion]]. */
+  def confusionCells(scored: DataFrame,
+                     labelCol: String = "target",
+                     predCol: String = "prediction"): Seq[(Double, Double, Long)] =
+    scored.groupBy(col(labelCol).cast("double"), col(predCol).cast("double"))
+      .agg(count(lit(1)))
+      .collect().toSeq
+      .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
+
+  /** Accuracy, precision, recall, f1 and mse for the positive class (1.0)
+    * from confusion cells: ratios of conditional counts, with 0/0 → 0 for
+    * precision, recall and f1. With no cells (an empty holdout) accuracy
+    * and mse, the means over no rows, are NaN. */
+  def binaryFromConfusion(cells: Seq[(Double, Double, Long)]): BinaryMetrics = {
+    def cnt(keep: (Double, Double) => Boolean): Long =
+      cells.iterator.collect { case (l, p, c) if keep(l, p) => c }.sum
+    val n = cells.iterator.map(_._3).sum
+    val tp = cnt((l, p) => l == 1.0 && p == 1.0)
+    val fp = cnt((l, p) => l == 0.0 && p == 1.0)
+    val fn = cnt((l, p) => l == 1.0 && p == 0.0)
+    val sqErr = cells.iterator.map { case (l, p, c) => math.pow(l - p, 2) * c }.sum
+    BinaryMetrics(
+      accuracy = cnt(_ == _).toDouble / n,
+      precision = tp.toDouble / math.max(tp + fp, 1L),
+      recall = tp.toDouble / math.max(tp + fn, 1L),
+      f1 = 2.0 * tp / math.max(2L * tp + fp + fn, 1L),
+      mse = sqErr / n)
+  }
+
+  /** Binary metrics of a scored frame from one confusion aggregation (the
+    * driver receives at most four cells — the only data that ever leaves
+    * the executors). */
   def binaryCollect(scored: DataFrame,
                     labelCol: String = "target",
-                    predCol: String = "prediction"): BinaryMetrics = {
-    val r = binary(scored, labelCol, predCol).head()
-    BinaryMetrics(r.getDouble(0), r.getDouble(1), r.getDouble(2),
-      r.getDouble(3), r.getDouble(4))
-  }
+                    predCol: String = "prediction"): BinaryMetrics =
+    binaryFromConfusion(confusionCells(scored, labelCol, predCol))
 }

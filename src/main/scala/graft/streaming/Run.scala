@@ -3,6 +3,8 @@ package graft.streaming
 import java.io.{File, FileOutputStream, ObjectInputStream, ObjectOutputStream, FileInputStream}
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -105,18 +107,21 @@ object Run {
     val lastPath = Paths.get(s"$outDir/infer_$tag.last")
     var lastBatch =
       if (Files.exists(lastPath)) Files.readString(lastPath).trim.toLong else -1L
-    var batchNo = 0L
+    // The CSV survives a restart along with the sidecar, so numbering
+    // resumes after its last row instead of repeating batch numbers.
+    var batchNo = Files.readAllLines(csvPath).asScala.drop(1).lastOption
+      .fold(0L)(_.takeWhile(_ != ',').toLong)
     records.writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", s"$outDir/_checkpoint_infer_$tag")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatch && !batch.isEmpty) {
-          val scored = model.predict(Featurize.featurize(batch, stem))
+        if (batchId > lastBatch) readOnce(batch) { (raw, n) =>
+          val scored = model.predict(Featurize.featurize(raw, stem))
           val m = Metrics.binaryCollect(scored)
           batchNo += 1
           Files.writeString(csvPath,
             f"$batchNo,${m.f1}%.6f,${m.accuracy}%.6f,${m.precision}%.6f," +
-              f"${m.recall}%.6f,${batch.count()},${m.mse}%.6f\n",
+              f"${m.recall}%.6f,$n,${m.mse}%.6f\n",
             StandardOpenOption.APPEND)
           lastBatch = batchId
           Files.writeString(lastPath, s"$batchId\n")
@@ -126,6 +131,31 @@ object Run {
       .start()
   }
 
+  /** Runs `body` on a non-empty micro-batch with its record count,
+    * reading the source once: the batch is persisted and counted, and
+    * every later job reads the cache. A re-read costs a full source scan
+    * each time, and the socket source's scan is quadratic in the
+    * partition size. */
+  private def readOnce(batch: DataFrame)(body: (DataFrame, Long) => Unit): Unit = {
+    val raw = batch.persist()
+    try {
+      val n = raw.count()
+      if (n > 0) body(raw, n)
+    } finally raw.unpersist()
+  }
+
+  /** K-means emits arbitrary cluster ids; scoring them directly as class
+    * labels is the reference's quirk (SURVEY §2.11.3), so the metrics use
+    * the id↔label alignment with the higher accuracy. Both alignments
+    * come from one confusion collect: flipping the prediction only swaps
+    * which counts land in which cell. */
+  private[streaming] def alignedClusterMetrics(scored: DataFrame): Metrics.BinaryMetrics = {
+    val cells = Metrics.confusionCells(scored)
+    val asIs = Metrics.binaryFromConfusion(cells)
+    val flip = Metrics.binaryFromConfusion(cells.map { case (l, p, c) => (l, 1.0 - p, c) })
+    if (flip.accuracy > asIs.accuracy) flip else asIs
+  }
+
   /** Start the incremental-training stream over a (Label, Tweet) stream
     * frame (already envelope-decoded — compose with Ingest.socketLines +
     * Ingest.decodeEnvelope for the reference's exact source).
@@ -133,7 +163,8 @@ object Run {
     * Per batch (cf. `SGDC/sgdc.py:31-126`): featurize → 80:20 split
     * (seed 42, M5) → partial_fit on the train split → score holdout →
     * metrics CSV append + stats TXT overwrite + state checkpoint, with a
-    * best-F1 model copy on improvement (K2–K4).
+    * best-F1 model copy on improvement (K2–K4). The batch is read from the
+    * source once and featurized once, both persisted until it is done.
     */
   /** `dynamicLabel = true` reproduces the reference's per-batch
     * StringIndexer refit (T5, `SGDC/sgdc.py:65,71`) instead of the fixed
@@ -162,37 +193,33 @@ object Run {
         // Replay guard: a crash between the model checkpoint and the
         // streaming commit replays the batch; training it again would
         // double-apply the gradient. State carries the last applied id.
-        if (batchId > state.lastBatch && !batch.isEmpty) {
+        if (batchId > state.lastBatch) readOnce(batch) { (raw, batchSize) =>
           // K1 — per-batch console sample (the reference's df.show(5),
           // `TESTING .py:67`), off by default.
-          if (consoleSample) batch.show(5)
+          if (consoleSample) raw.show(5)
           val featurized =
             if (dynamicLabel) {
               // the reference's exact T6 pipeline: HashingTF + per-batch
               // StringIndexer refit, hashing the same column the chain
               // produced (stemmed when stem=true, matching sgdc.py:64)
-              val toks = Featurize.features(Featurize.cleaned(batch), stem).drop("tf")
+              val toks = Featurize.features(Featurize.cleaned(raw), stem).drop("tf")
               val tokensCol = if (stem) "stemmed" else "filtered"
               Featurize.dynamicLabelPipeline(tokensCol).fit(toks).transform(toks)
-            } else Featurize.featurize(batch, stem)
-          val Array(train, test) = featurized.randomSplit(Array(0.8, 0.2), seed = 42)
-          state.model.partialFit(train)
-          val scored = state.model.predict(test)
-          // K-means emits arbitrary cluster ids; scoring them directly as
-          // class labels is the reference's quirk (SURVEY §2.11.3) — here
-          // metrics use the id↔label alignment with the higher accuracy.
-          val m = algo match {
-            case Kmeans =>
-              import org.apache.spark.sql.functions.{col, lit}
-              val flipped = scored.withColumn("prediction",
-                lit(1.0) - col("prediction"))
-              val (asIs, flip) =
-                (Metrics.binaryCollect(scored), Metrics.binaryCollect(flipped))
-              if (flip.accuracy > asIs.accuracy) flip else asIs
-            case _ => Metrics.binaryCollect(scored)
-          }
+            } else Featurize.featurize(raw, stem)
+          // Featurized once for both splits. The split runs on exactly
+          // the chain's columns in the source's partition layout: its
+          // within-partition sort over those columns defines the split.
+          featurized.persist()
+          val m = try {
+            val Array(train, test) = featurized.randomSplit(Array(0.8, 0.2), seed = 42)
+            state.model.partialFit(train)
+            val scored = state.model.predict(test)
+            algo match {
+              case Kmeans => alignedClusterMetrics(scored)
+              case _ => Metrics.binaryCollect(scored)
+            }
+          } finally featurized.unpersist()
           state.iter += 1
-          val batchSize = batch.count()
           Files.writeString(csvPath,
             f"${state.iter},${m.f1}%.6f,${math.max(state.bestF1, m.f1)}%.6f," +
               f"${m.accuracy}%.6f,${m.precision}%.6f,${m.recall}%.6f," +

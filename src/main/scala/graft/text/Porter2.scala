@@ -14,10 +14,16 @@ package graft.text
   *     output of Tokenizer/StopWordsRemover, which is already lowercase);
   *   - words of length ≤ 2 are returned unchanged (spec);
   *   - both exception lists of the spec are honored.
+  *
+  * It runs once per token of every stemmed micro-batch, so a call
+  * allocates only the word's char buffer and the result: the suffix
+  * tables are built once, vowels are tested by `Char` compares, and
+  * every step edits the buffer in place (a word never grows past its
+  * input length). R1 is recomputed at the same points as in the
+  * straightforward version (kept as the test arm `Porter2Reference`),
+  * including its stale R1 in step 1b; R2 only where a step reads it.
   */
 object Porter2 {
-
-  private val Vowels = "aeiouy".toSet
 
   /** Full-word exceptions applied before the algorithm. */
   private val Exceptions1: Map[String, String] = Map(
@@ -28,179 +34,229 @@ object Porter2 {
     "bias" -> "bias", "andes" -> "andes")
 
   /** Words invariant after step 1a. */
-  private val Exceptions2: Set[String] = Set(
+  private val Exceptions2: Array[String] = Array(
     "inning", "outing", "canning", "herring", "earring",
     "proceed", "exceed", "succeed")
 
-  private val Doubles = Set("bb", "dd", "ff", "gg", "mm", "nn", "pp", "rr", "tt")
-  private val LiEnding = "cdeghkmnrt".toSet
+  /** A suffix rule: replace `suffix` by `repl` when the char before the
+    * suffix is one of `before` (null: any char, or none). */
+  private final class Rule(val suffix: String, val repl: String, val before: String)
 
-  private def isVowel(c: Char): Boolean = Vowels.contains(c)
+  /** Step tables are in longest-first order, so the first suffix that
+    * matches is the longest. */
+  private val Step2 = Array(
+    new Rule("ization", "ize", null), new Rule("ational", "ate", null),
+    new Rule("fulness", "ful", null), new Rule("ousness", "ous", null),
+    new Rule("iveness", "ive", null), new Rule("tional", "tion", null),
+    new Rule("biliti", "ble", null), new Rule("lessli", "less", null),
+    new Rule("entli", "ent", null), new Rule("ation", "ate", null),
+    new Rule("alism", "al", null), new Rule("aliti", "al", null),
+    new Rule("ousli", "ous", null), new Rule("iviti", "ive", null),
+    new Rule("fulli", "ful", null), new Rule("enci", "ence", null),
+    new Rule("anci", "ance", null), new Rule("abli", "able", null),
+    new Rule("izer", "ize", null), new Rule("ator", "ate", null),
+    new Rule("alli", "al", null), new Rule("bli", "ble", null),
+    new Rule("ogi", "og", "l"), new Rule("li", "", "cdeghkmnrt"))
 
-  /** R1 start index; special-cased prefixes per the spec. */
-  private def r1Start(w: String): Int = {
-    for (p <- Seq("gener", "commun", "arsen"))
-      if (w.startsWith(p)) return p.length
+  /** Step 3 apart from `ative`, which needs R2. */
+  private val Step3 = Array(
+    new Rule("ational", "ate", null), new Rule("tional", "tion", null),
+    new Rule("alize", "al", null), new Rule("icate", "ic", null),
+    new Rule("iciti", "ic", null), new Rule("ical", "ic", null),
+    new Rule("ness", "", null), new Rule("ful", "", null))
+
+  private val Step4 = Array("ement", "ance", "ence", "able",
+    "ible", "ment", "ant", "ent", "ism", "ate", "iti", "ous", "ive", "ize",
+    "al", "er", "ic").map(new Rule(_, "", null))
+
+  private def isVowel(c: Char): Boolean =
+    c == 'a' || c == 'e' || c == 'i' || c == 'o' || c == 'u' || c == 'y'
+
+  /** `b[0, n)` ends with `s`. */
+  private def ends(b: Array[Char], n: Int, s: String): Boolean = {
+    val k = s.length
+    if (k > n) return false
     var i = 0
-    while (i < w.length && !isVowel(w(i))) i += 1      // skip leading non-vowels
-    while (i < w.length && isVowel(w(i))) i += 1        // skip the vowel run
-    if (i < w.length) i + 1 else w.length
+    while (i < k) {
+      if (b(n - k + i) != s.charAt(i)) return false
+      i += 1
+    }
+    true
   }
 
-  private def regionStartAfter(w: String, from: Int): Int = {
+  private def starts(b: Array[Char], n: Int, s: String): Boolean = {
+    val k = s.length
+    if (k > n) return false
+    var i = 0
+    while (i < k) {
+      if (b(i) != s.charAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Writes `s` at `b[n)`; returns the new length. */
+  private def put(b: Array[Char], n: Int, s: String): Int = {
+    s.getChars(0, s.length, b, n)
+    n + s.length
+  }
+
+  /** `b[0, until)` holds a vowel. */
+  private def hasVowel(b: Array[Char], until: Int): Boolean = {
+    var i = 0
+    while (i < until) {
+      if (isVowel(b(i))) return true
+      i += 1
+    }
+    false
+  }
+
+  /** R1 start index of `b[0, n)`; special-cased prefixes per the spec. */
+  private def r1Start(b: Array[Char], n: Int): Int =
+    if (starts(b, n, "gener") || starts(b, n, "arsen")) 5
+    else if (starts(b, n, "commun")) 6
+    else regionStartAfter(b, n, 0)
+
+  private def regionStartAfter(b: Array[Char], n: Int, from: Int): Int = {
     var i = from
-    while (i < w.length && !isVowel(w(i))) i += 1
-    while (i < w.length && isVowel(w(i))) i += 1
-    if (i < w.length) i + 1 else w.length
+    while (i < n && !isVowel(b(i))) i += 1   // skip non-vowels
+    while (i < n && isVowel(b(i))) i += 1    // skip the vowel run
+    if (i < n) i + 1 else n
   }
 
-  /** Ends in a short syllable: (non-vowel, vowel, non-vowel≠wxY) at end,
-    * or (vowel, non-vowel) covering the whole 2-letter word start. */
-  private def endsShortSyllable(w: String): Boolean = {
-    val n = w.length
-    if (n == 2) isVowel(w(0)) && !isVowel(w(1))
+  /** `b[0, n)` ends in a short syllable: (non-vowel, vowel, non-vowel≠wxY)
+    * at the end, or (vowel, non-vowel) as the whole 2-letter word. */
+  private def endsShortSyllable(b: Array[Char], n: Int): Boolean =
+    if (n == 2) isVowel(b(0)) && !isVowel(b(1))
     else if (n >= 3) {
-      val (a, b, c) = (w(n - 3), w(n - 2), w(n - 1))
-      !isVowel(a) && isVowel(b) && !isVowel(c) && c != 'w' && c != 'x' && c != 'Y'
+      val c = b(n - 1)
+      !isVowel(b(n - 3)) && isVowel(b(n - 2)) && !isVowel(c) &&
+        c != 'w' && c != 'x' && c != 'Y'
     } else false
+
+  /** `b[0, n)` ends in one of bb dd ff gg mm nn pp rr tt. */
+  private def endsDouble(b: Array[Char], n: Int): Boolean =
+    n >= 2 && b(n - 1) == b(n - 2) && "bdfgmnprt".indexOf(b(n - 1)) >= 0
+
+  /** The first rule of a step whose suffix ends `b[0, n)`, or null. */
+  private def firstRule(step: Array[Rule], b: Array[Char], n: Int): Rule = {
+    var k = 0
+    while (k < step.length) {
+      if (ends(b, n, step(k).suffix)) return step(k)
+      k += 1
+    }
+    null
   }
 
-  private def containsVowel(s: String): Boolean = s.exists(isVowel)
+  /** Applies `rule` (which matched) if its suffix starts at or after
+    * `region` and its `before` guard holds; returns the new length. */
+  private def applyRule(rule: Rule, b: Array[Char], n: Int, region: Int): Int = {
+    val stemLen = n - rule.suffix.length
+    if (stemLen < region) n
+    else if (rule.before != null &&
+      (stemLen == 0 || rule.before.indexOf(b(stemLen - 1)) < 0)) n
+    else put(b, stemLen, rule.repl)
+  }
 
   def stem(input: String): String = {
     if (input == null) return null
-    var w = input
+    if (input.length < 3) return input
+    val w = if (input.charAt(0) == '\'') input.substring(1) else input
+    val e = Exceptions1.getOrElse(w, null)
+    if (e != null) return e
     if (w.length < 3) return w
-    if (w.charAt(0) == '\'') w = w.substring(1)
-    Exceptions1.get(w) match {
-      case Some(s) => return s
-      case None =>
-    }
-    if (w.length < 3) return w
+
+    val b = w.toCharArray
+    var n = b.length
 
     // mark consonant y as Y
-    val sb = new StringBuilder(w)
-    if (sb.nonEmpty && sb(0) == 'y') sb(0) = 'Y'
-    for (i <- 1 until sb.length)
-      if (sb(i) == 'y' && isVowel(sb(i - 1))) sb(i) = 'Y'
-    w = sb.toString
-
-    var r1 = r1Start(w)
-    var r2 = regionStartAfter(w, r1)
-    def inR1(suffixLen: Int): Boolean = w.length - suffixLen >= r1
-    def inR2(suffixLen: Int): Boolean = w.length - suffixLen >= r2
-
-    // Step 0: drop ', 's, 's'
-    for (s <- Seq("'s'", "'s", "'")) {
-      if (w.endsWith(s) && w.length > s.length) {
-        w = w.dropRight(s.length)
-      }
+    if (b(0) == 'y') b(0) = 'Y'
+    var i = 1
+    while (i < n) {
+      if (b(i) == 'y' && isVowel(b(i - 1))) b(i) = 'Y'
+      i += 1
     }
+
+    var r1 = r1Start(b, n)
+
+    // Step 0: drop ', 's, 's' — each tested in turn
+    if (ends(b, n, "'s'") && n > 3) n -= 3
+    if (ends(b, n, "'s") && n > 2) n -= 2
+    if (ends(b, n, "'") && n > 1) n -= 1
 
     // Step 1a
-    if (w.endsWith("sses")) w = w.dropRight(2)
-    else if (w.endsWith("ied") || w.endsWith("ies")) {
-      w = if (w.length - 3 > 1) w.dropRight(2) else w.dropRight(1)
-    } else if (w.endsWith("us") || w.endsWith("ss")) ()
-    else if (w.endsWith("s")) {
-      if (containsVowel(w.substring(0, math.max(w.length - 2, 0))))
-        w = w.dropRight(1)
+    if (ends(b, n, "sses")) n -= 2
+    else if (ends(b, n, "ied") || ends(b, n, "ies")) n -= (if (n - 3 > 1) 2 else 1)
+    else if (ends(b, n, "us") || ends(b, n, "ss")) ()
+    else if (ends(b, n, "s")) {
+      if (hasVowel(b, n - 2)) n -= 1
     }
 
-    if (Exceptions2.contains(w)) return w
-
-    // Step 1b
-    val eedSuffix = Seq("eedly", "eed").find(w.endsWith)
-    eedSuffix match {
-      case Some(s) =>
-        if (inR1(s.length)) w = w.dropRight(s.length) + "ee"
-      case None =>
-        Seq("ingly", "edly", "ing", "ed").find(w.endsWith) match {
-          case Some(s) if containsVowel(w.dropRight(s.length)) =>
-            w = w.dropRight(s.length)
-            if (w.endsWith("at") || w.endsWith("bl") || w.endsWith("iz")) w += "e"
-            else if (Doubles.exists(w.endsWith)) w = w.dropRight(1)
-            else {
-              // word is short: R1 empty and ends in short syllable
-              r1 = r1Start(w); r2 = regionStartAfter(w, r1)
-              if (r1 >= w.length && endsShortSyllable(w)) w += "e"
-            }
-          case _ =>
-        }
+    var x = 0
+    while (x < Exceptions2.length) {
+      val e = Exceptions2(x)
+      if (e.length == n && starts(b, n, e)) return e
+      x += 1
     }
-    r1 = r1Start(w); r2 = regionStartAfter(w, r1)
+
+    // Step 1b (`eed` is tested against the R1 of the word as it entered
+    // step 0)
+    val eed = if (ends(b, n, "eedly")) 5 else if (ends(b, n, "eed")) 3 else 0
+    if (eed > 0) {
+      if (n - eed >= r1) n = put(b, n - eed, "ee")
+    } else {
+      val ed =
+        if (ends(b, n, "ingly")) 5 else if (ends(b, n, "edly")) 4
+        else if (ends(b, n, "ing")) 3 else if (ends(b, n, "ed")) 2 else 0
+      if (ed > 0 && hasVowel(b, n - ed)) {
+        n -= ed
+        if (ends(b, n, "at") || ends(b, n, "bl") || ends(b, n, "iz")) n = put(b, n, "e")
+        else if (endsDouble(b, n)) n -= 1
+        // word is short: R1 empty and ends in short syllable
+        else if (r1Start(b, n) >= n && endsShortSyllable(b, n)) n = put(b, n, "e")
+      }
+    }
+    r1 = r1Start(b, n)
 
     // Step 1c: y/Y -> i if preceded by a non-vowel that is not word-initial
-    if (w.length > 2 && (w.endsWith("y") || w.endsWith("Y")) &&
-        !isVowel(w(w.length - 2)))
-      w = w.dropRight(1) + "i"
+    if (n > 2 && (b(n - 1) == 'y' || b(n - 1) == 'Y') && !isVowel(b(n - 2)))
+      b(n - 1) = 'i'
 
     // Step 2 (longest suffix, in R1)
-    val step2: Seq[(String, String => Option[String])] = Seq(
-      "ization" -> (s => Some(s + "ize")),
-      "ational" -> (s => Some(s + "ate")),
-      "fulness" -> (s => Some(s + "ful")),
-      "ousness" -> (s => Some(s + "ous")),
-      "iveness" -> (s => Some(s + "ive")),
-      "tional"  -> (s => Some(s + "tion")),
-      "biliti"  -> (s => Some(s + "ble")),
-      "lessli"  -> (s => Some(s + "less")),
-      "entli"   -> (s => Some(s + "ent")),
-      "ation"   -> (s => Some(s + "ate")),
-      "alism"   -> (s => Some(s + "al")),
-      "aliti"   -> (s => Some(s + "al")),
-      "ousli"   -> (s => Some(s + "ous")),
-      "iviti"   -> (s => Some(s + "ive")),
-      "fulli"   -> (s => Some(s + "ful")),
-      "enci"    -> (s => Some(s + "ence")),
-      "anci"    -> (s => Some(s + "ance")),
-      "abli"    -> (s => Some(s + "able")),
-      "izer"    -> (s => Some(s + "ize")),
-      "ator"    -> (s => Some(s + "ate")),
-      "alli"    -> (s => Some(s + "al")),
-      "bli"     -> (s => Some(s + "ble")),
-      "ogi"     -> (s => if (s.endsWith("l")) Some(s + "og") else None),
-      "li"      -> (s => if (s.nonEmpty && LiEnding.contains(s.last)) Some(s) else None))
-    step2.find { case (suf, _) => w.endsWith(suf) } match {
-      case Some((suf, repl)) if inR1(suf.length) =>
-        repl(w.dropRight(suf.length)).foreach(w = _)
-      case _ =>
-    }
-    r1 = r1Start(w); r2 = regionStartAfter(w, r1)
+    val s2 = firstRule(Step2, b, n)
+    if (s2 != null) n = applyRule(s2, b, n, r1)
+    r1 = r1Start(b, n)
+    var r2 = regionStartAfter(b, n, r1)   // R2 is first needed by step 3
 
     // Step 3 (in R1; `ative` needs R2)
-    val step3: Seq[(String, String)] = Seq(
-      "ational" -> "ate", "tional" -> "tion", "alize" -> "al",
-      "icate" -> "ic", "iciti" -> "ic", "ical" -> "ic",
-      "ness" -> "", "ful" -> "")
-    if (w.endsWith("ative") && inR2(5)) w = w.dropRight(5)
-    else step3.find { case (suf, _) => w.endsWith(suf) } match {
-      case Some((suf, rep)) if inR1(suf.length) => w = w.dropRight(suf.length) + rep
-      case _ =>
+    if (ends(b, n, "ative") && n - 5 >= r2) n -= 5
+    else {
+      val s3 = firstRule(Step3, b, n)
+      if (s3 != null) n = applyRule(s3, b, n, r1)
     }
-    r1 = r1Start(w); r2 = regionStartAfter(w, r1)
+    r1 = r1Start(b, n); r2 = regionStartAfter(b, n, r1)
 
-    // Step 4 (in R2)
-    val step4 = Seq("ement", "ance", "ence", "able", "ible", "ment",
-      "ant", "ent", "ism", "ate", "iti", "ous", "ive", "ize",
-      "al", "er", "ic")
-    step4.find(w.endsWith) match {
-      case Some(suf) if inR2(suf.length) => w = w.dropRight(suf.length)
-      case Some(_) => // suffix present but not in R2: stop (longest-match semantics)
-      case None =>
-        if (w.endsWith("ion") && inR2(3) &&
-            w.length > 3 && (w(w.length - 4) == 's' || w(w.length - 4) == 't'))
-          w = w.dropRight(3)
-    }
-    r1 = r1Start(w); r2 = regionStartAfter(w, r1)
+    // Step 4 (in R2); a suffix present but not in R2 stops the step
+    // (longest-match semantics)
+    val s4 = firstRule(Step4, b, n)
+    if (s4 != null) n = applyRule(s4, b, n, r2)
+    else if (ends(b, n, "ion") && n - 3 >= r2 && n > 3 &&
+        (b(n - 4) == 's' || b(n - 4) == 't'))
+      n -= 3
+    r1 = r1Start(b, n); r2 = regionStartAfter(b, n, r1)
 
     // Step 5
-    if (w.endsWith("e") &&
-        (inR2(1) || (inR1(1) && !endsShortSyllable(w.dropRight(1)))))
-      w = w.dropRight(1)
-    else if (w.endsWith("l") && inR2(1) && w.length > 1 && w(w.length - 2) == 'l')
-      w = w.dropRight(1)
+    if (ends(b, n, "e") &&
+        (n - 1 >= r2 || (n - 1 >= r1 && !endsShortSyllable(b, n - 1))))
+      n -= 1
+    else if (ends(b, n, "l") && n - 1 >= r2 && n > 1 && b(n - 2) == 'l')
+      n -= 1
 
-    w.replace('Y', 'y')
+    i = 0
+    while (i < n) {
+      if (b(i) == 'Y') b(i) = 'y'
+      i += 1
+    }
+    new String(b, 0, n)
   }
 }

@@ -62,6 +62,28 @@ class MetricsSpec extends SparkSpec {
       "calibration is vacuous without both classes")
   }
 
+  test("binaryCollect equals the one-row SQL aggregate bit for bit") {
+    val rnd = new scala.util.Random(17)
+    val frames = for {
+      n <- Seq(1, 3, 50, 1001)
+      pPos <- Seq(0.0, 0.4, 1.0)
+      agree <- Seq(0.0, 0.7, 1.0)
+    } yield Seq.fill(n) {
+      val y = if (rnd.nextDouble() < pPos) 1.0 else 0.0
+      (y, if (rnd.nextDouble() < agree) y else 1.0 - y)
+    }.toDF("target", "prediction").repartition(1 + rnd.nextInt(4))
+    for (d <- frames) {
+      val (got, want) = (Metrics.binaryCollect(d), BinaryReference.collect(d))
+      assert(BinaryReference.bits(got) == BinaryReference.bits(want), s"$got != $want")
+    }
+  }
+
+  test("an empty holdout has NaN accuracy and mse and zero precision, recall and f1") {
+    val m = Metrics.binaryCollect(Seq.empty[(Double, Double)].toDF("target", "prediction"))
+    assert(m.accuracy.isNaN && m.mse.isNaN, m)
+    assert(m.precision == 0.0 && m.recall == 0.0 && m.f1 == 0.0, m)
+  }
+
   test("degenerate all-negative predictions do not divide by zero") {
     val d = Seq((1.0, 0.0), (0.0, 0.0)).toDF("target", "prediction")
     val m = Metrics.binaryCollect(d)

@@ -2,8 +2,14 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.SparkSpec
+import graft.ml.{BinaryReference, Featurize, Incremental, Metrics}
 import graft.sources.Ingest
 
 class RunSpec extends SparkSpec {
@@ -163,5 +169,183 @@ class RunSpec extends SparkSpec {
     // loadState keeps counters (the reference resets them on restart)
     val reloaded = Run.loadState(s"$outDir/model_r.bin").get
     assert(reloaded.iter == after1.iter && reloaded.bestF1 == after1.bestF1)
+  }
+
+  /** One `["label,text"]` envelope per line, as the socket source gets
+    * them; label 4 iff the text mentions "fast", over a vocabulary the
+    * stemmer folds (running/runs, happiness/happy, ...). */
+  private def recordLines(rnd: scala.util.Random, n: Int): Seq[String] = {
+    val vocab = Seq("running", "runs", "happiness", "happy", "nationally",
+      "national", "generously", "organization", "feeds", "cried", "hopping",
+      "hoping", "fast", "faster", "slowly", "slow", "cats", "ponies", "ski's",
+      "connection", "connected", "relational", "electricity", "agreed")
+    Seq.fill(n) {
+      val text = Seq.fill(3 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.length))).mkString(" ")
+      envelope(Seq((if (text.contains("fast")) "4" else "0", text)))
+    }
+  }
+
+  /** The source's lines, counting every line decoded. */
+  private def counted(stream: MemoryStream[String],
+                      decoded: org.apache.spark.util.LongAccumulator): DataFrame = {
+    import spark.implicits._
+    stream.toDS().map { v => decoded.add(1); v }.toDF("value")
+  }
+
+  test("live stats CSV equals a featurize-persist-split replay; each record decoded once") {
+    val outDir = Files.createTempDirectory("graft-replay").toString
+    implicit val sqlCtx = spark.sqlContext
+    val par = 2
+    // record i of a micro-batch lands in partition i mod 2, the layout
+    // the socket source gives a batch
+    val stream = MemoryStream[String](par)
+    val decoded = spark.sparkContext.longAccumulator("decoded")
+    val query = Run.trainingStream(Ingest.decodeEnvelope(counted(stream, decoded)),
+      Run.Pa, outDir, tag = "replay", stem = true, triggerMs = 50L)
+    val rnd = new scala.util.Random(7)
+    val batches = Seq(120, 200, 90).map(recordLines(rnd, _))
+    try {
+      var sent = 0L
+      for (b <- batches) {
+        stream.addData(b)
+        query.processAllAvailable()
+        sent += b.size
+        assert(decoded.value == sent, s"decoded ${decoded.value} lines for $sent records")
+      }
+    } finally query.stop()
+
+    val schema = StructType(Seq(StructField("value", StringType)))
+    val model = new Incremental.LinearModel(Featurize.NumFeatures)
+    val replay = batches.map { lines =>
+      val parts = (0 until par).map(p => lines.indices.filter(_ % par == p).map(lines))
+      val rdd = spark.sparkContext.parallelize(parts, par).flatMap(_.map(Row(_)))
+      val batch = Ingest.decodeEnvelope(spark.createDataFrame(rdd, schema))
+      val featurized = Featurize.featurize(batch, stem = true).persist()
+      val Array(train, test) = featurized.randomSplit(Array(0.8, 0.2), seed = 42)
+      Incremental.PassiveAggressive.partialFit(model, train)
+      val m = Metrics.binaryCollect(model.predictCol(test))
+      featurized.unpersist()
+      f"${m.f1}%.6f,${m.accuracy}%.6f,${m.precision}%.6f,${m.recall}%.6f," +
+        f"${lines.size},${m.mse}%.6f"
+    }
+    val live = Files.readAllLines(Paths.get(s"$outDir/stats_replay.csv")).asScala.drop(1)
+      .map { r => val c = r.split(","); (c.take(2).drop(1) ++ c.drop(3)).mkString(",") }
+    assert(live.toSeq == replay)
+  }
+
+  test("inference decodes each record once per micro-batch") {
+    val outDir = Files.createTempDirectory("graft-infer-once").toString
+    implicit val sqlCtx = spark.sqlContext
+    val trainStream = MemoryStream[String]
+    val tq = Run.trainingStream(Ingest.decodeEnvelope(trainStream.toDF()), Run.Pa,
+      outDir, tag = "frozen", stem = true, triggerMs = 50L)
+    val rnd = new scala.util.Random(11)
+    try {
+      trainStream.addData(recordLines(rnd, 100))
+      tq.processAllAvailable()
+    } finally tq.stop()
+
+    val stream = MemoryStream[String](2)
+    val decoded = spark.sparkContext.longAccumulator("decoded")
+    val iq = Run.inferenceStream(Ingest.decodeEnvelope(counted(stream, decoded)),
+      s"$outDir/model_frozen.bin", outDir, tag = "once", stem = true, triggerMs = 50L)
+    try {
+      var sent = 0L
+      for (n <- Seq(80, 50)) {
+        stream.addData(recordLines(rnd, n))
+        iq.processAllAvailable()
+        sent += n
+        assert(decoded.value == sent, s"decoded ${decoded.value} lines for $sent records")
+      }
+    } finally iq.stop()
+    val csv = Files.readAllLines(Paths.get(s"$outDir/infer_once.csv")).asScala.drop(1)
+    assert(csv.map(_.split(",")(5).toLong) == Seq(80L, 50L))
+  }
+
+  test("a restarted inference stream continues the batch numbering") {
+    val outDir = Files.createTempDirectory("graft-infer-restart").toString
+    implicit val sqlCtx = spark.sqlContext
+    val trainStream = MemoryStream[String]
+    val tq = Run.trainingStream(Ingest.decodeEnvelope(trainStream.toDF()), Run.Pa,
+      outDir, tag = "frozen", stem = false, triggerMs = 50L)
+    try {
+      trainStream.addData(envelope((1 to 40).map(i =>
+        if (i % 2 == 0) ("4", "good great nice fine") else ("0", "bad awful sad poor"))))
+      tq.processAllAvailable()
+    } finally tq.stop()
+
+    // one source, two runs of the query over the same checkpoint, CSV
+    // and sidecar: the second run resumes at the next micro-batch
+    val stream = MemoryStream[String]
+    def runOnce(recs: Seq[(String, String)]): Unit = {
+      val q = Run.inferenceStream(Ingest.decodeEnvelope(stream.toDF()),
+        s"$outDir/model_frozen.bin", outDir, tag = "rs", stem = false, triggerMs = 50L)
+      try {
+        stream.addData(envelope(recs))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    runOnce(Seq(("4", "good great"), ("0", "bad awful")))
+    runOnce(Seq(("4", "nice fine"), ("0", "sad poor"), ("4", "great")))
+    runOnce(Seq(("0", "awful")))
+    val rows = Files.readAllLines(Paths.get(s"$outDir/infer_rs.csv")).asScala.drop(1)
+    assert(rows.map(_.split(",")(5).toLong) == Seq(2L, 3L, 1L), rows)
+    val numbers = rows.map(_.split(",")(0).toLong)
+    assert(numbers.zip(numbers.drop(1)).forall { case (a, b) => a < b }, rows)
+  }
+
+  test("k-means alignment from one confusion collect equals two SQL-aggregate calls bit for bit") {
+    import spark.implicits._
+    def twoCalls(scored: DataFrame): Metrics.BinaryMetrics = {
+      val flipped = scored.withColumn("prediction", lit(1.0) - col("prediction"))
+      val (asIs, flip) = (BinaryReference.collect(scored), BinaryReference.collect(flipped))
+      if (flip.accuracy > asIs.accuracy) flip else asIs
+    }
+    val rnd = new scala.util.Random(5)
+    // synthetic cluster ids: sizes, class skews and agreement rates that
+    // make either alignment win, and ties
+    val synthetic = for {
+      n <- Seq(1, 2, 7, 101, 997)
+      pPos <- Seq(0.0, 0.3, 0.5, 1.0)
+      agree <- Seq(0.0, 0.2, 0.5, 0.9)
+    } yield Seq.fill(n) {
+      val y = if (rnd.nextDouble() < pPos) 1.0 else 0.0
+      (y, if (rnd.nextDouble() < agree) y else 1.0 - y)
+    }.toDF("target", "prediction").repartition(3)
+    // real cluster ids from a trained MiniBatchKMeans
+    val feats = Featurize.featurize(Ingest.decodeEnvelope(
+      recordLines(new scala.util.Random(3), 300).toDF("value")), stem = true)
+    val km = new Incremental.MiniBatchKMeans(k = 2, dim = Featurize.NumFeatures)
+    km.partialFit(feats)
+    for (scored <- synthetic :+ km.predictCol(feats)) {
+      val (one, two) = (Run.alignedClusterMetrics(scored), twoCalls(scored))
+      assert(BinaryReference.bits(one) == BinaryReference.bits(two), s"$one != $two")
+    }
+  }
+
+  test("a micro-batch with an empty holdout split writes NaN accuracy and mse") {
+    val outDir = Files.createTempDirectory("graft-empty-holdout").toString
+    implicit val sqlCtx = spark.sqlContext
+    val lines = Seq(envelope(Seq(("4", "good great fine"))))
+    // precondition: seed 42 puts the lone record in the training split
+    val schema = StructType(Seq(StructField("value", StringType)))
+    val rdd = spark.sparkContext.parallelize(lines.map(Row(_)), 1)
+    val feats = Featurize.featurize(Ingest.decodeEnvelope(spark.createDataFrame(rdd, schema)),
+      stem = false)
+    assert(feats.randomSplit(Array(0.8, 0.2), seed = 42)(1).isEmpty)
+
+    val stream = MemoryStream[String](1)
+    val query = Run.trainingStream(Ingest.decodeEnvelope(stream.toDF()), Run.Pa,
+      outDir, tag = "empty", stem = false, triggerMs = 50L)
+    try {
+      stream.addData(lines)
+      query.processAllAvailable()
+    } finally query.stop()
+    val csv = Files.readAllLines(Paths.get(s"$outDir/stats_empty.csv")).asScala
+    assert(csv.size == 2, csv)
+    val c = csv(1).split(",")
+    // iter,f1,maxf1,acc,precision,recall,batchsize,mse
+    assert(c(3) == "NaN" && c(7) == "NaN", csv(1))
+    assert(Seq(c(1), c(4), c(5)).map(_.toDouble) == Seq(0.0, 0.0, 0.0) && c(6) == "1", csv(1))
   }
 }

@@ -149,9 +149,7 @@ object ArtifactStore {
     val fs = cache.getFileSystem(s.sparkContext.hadoopConfiguration)
     val prior = graft.sources.CorpusFiles.readManifest(fs, cache)
       .getOrElse(Map.empty[String, (Long, Long, Long)])
-    val (unchanged, changed) = listing.partition { case (p, sz, mt) =>
-      prior.get(p).exists { case (s0, m0, _) => s0 == sz && m0 == mt }
-    }
+    val (unchanged, changed) = listing.partition(sameFile(prior))
     val sums = graft.sources.CorpusFiles.fileSums(s, changed.map(_._1), digest)
     fpScanned.put(key, changed.map(_._1))
     val unknown = sums.keySet -- changed.map(_._1).toSet
@@ -344,9 +342,11 @@ object ArtifactStore {
   def dataPath(key: String, fp: Long): String =
     Paths.get(root, key, s"fp-$fp", "data").toString
 
-  /** Every published fingerprint of `key` (manifest present) — the
+  /** Every published fingerprint of `key` (manifest present), in
+    * publish order — oldest first, by manifest write time — the
     * enumeration surface for cross-generation maintenance (takedown
-    * scrubs, [[invalidateAllFps]]). */
+    * scrubs, [[invalidateAllFps]]), carry-base selection (the newest
+    * qualifying generation is the last) and [[gcKeepLatest]]. */
   def publishedFps(key: String): Seq[Long] = {
     import scala.jdk.CollectionConverters._
     val base = Paths.get(root, key)
@@ -355,6 +355,8 @@ object ArtifactStore {
     try kids.iterator().asScala.toSeq
       .filter(p => p.getFileName.toString.startsWith("fp-") &&
         Files.exists(p.resolve("manifest.json")))
+      .sortBy(p =>
+        Files.getLastModifiedTime(p.resolve("manifest.json")).toMillis)
       .map(_.getFileName.toString.stripPrefix("fp-").toLong)
     finally kids.close()
   }
@@ -438,38 +440,10 @@ object ArtifactStore {
 
   // ------------------------------------------------------ delta generations
 
-  /** (carried docs, delta-built docs) of the last delta-path build per
+  /** (carried rows, re-derived rows) of the last delta-path build per
     * key — spec observability for "generation N+1 derived only the
     * appended docs" (ArtifactDeltaSpec). Full builds record (-1, -1). */
   private[graft] val deltaStats = new ConcurrentHashMap[String, (Long, Long)]()
-
-  /** The carry algebra every delta family shares (documents rows,
-    * serve cells, PQ codes): split the current corpus's (id, digest)
-    * certificate frame against a prior generation's into the unchanged
-    * ids (carry) and changed/new ids (rebuild), recording the counts
-    * under `statsKey`. ONE join materialized once (localCheckpoint) —
-    * both id frames and the stats read the same tagged pass, so the
-    * build adds one key-sized job, not three. Returns
-    * (unchangedIds, changedIds, curKeys-checkpointed) — the caller
-    * reuses the checkpointed certificate for its sidecar write instead
-    * of re-scanning the corpus. */
-  private[graft] def deltaSplit(statsKey: String, idCol: String,
-                                curKeys: DataFrame, priorKeys: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val tagged = curKeys
-      .join(priorKeys.select(col(idCol), col("digest"))
-        .withColumn("_hit", lit(1)), Seq(idCol, "digest"), "left")
-      .select(col(idCol), col("digest"),
-        coalesce(col("_hit"), lit(0)).as("_hit"))
-      .localCheckpoint()
-    val byHit = tagged.groupBy(col("_hit")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    deltaStats.put(statsKey,
-      (byHit.getOrElse(1, 0L), byHit.getOrElse(0, 0L)))
-    (tagged.where(col("_hit") === 1).select(col(idCol)),
-      tagged.where(col("_hit") === 0).select(col(idCol)),
-      tagged.select(col(idCol), col("digest")))
-  }
 
   /** The (doc_id, digest, src, bck) sidecar recording WHICH corpus a
     * generation was built from — the delta path's carry certificate,
@@ -490,6 +464,14 @@ object ArtifactStore {
     * NEXT build knows exactly which files it derived from. */
   private def filesManifestPath(key: String, fp: Long): Path =
     Paths.get(root, key, s"fp-$fp", "files")
+
+  /** Generation `fp`'s file manifest; None when absent or torn. */
+  private def generationManifest(s: SparkSession, key: String,
+                                 fp: Long): Option[Map[String, (Long, Long, Long)]] =
+    graft.sources.CorpusFiles.readManifest(
+      new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(s.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(filesManifestPath(key, fp).toString))
 
   /** Doc-id bucket count for a delta generation's partition layout,
     * SCALED to the corpus: ~[[BucketTargetBytes]] of source corpus per
@@ -518,16 +500,12 @@ object ArtifactStore {
     math.max(8L, math.min(65536L, rounded)).toInt
   }
 
-  private def bckCol(nb: Int): Column = pmod(col("doc_id"), lit(nb.toLong))
-
-  /** The current corpus certificate over exactly `paths`:
-    * (doc_id, digest, src, bck). */
-  private def docCertFrame(s: SparkSession, paths: Seq[String],
-                           nb: Int): DataFrame =
+  /** The current documents certificate over exactly `paths`:
+    * (doc_id, digest, src). */
+  private def docCertFrame(s: SparkSession, paths: Seq[String]): DataFrame =
     s.read.parquet(paths: _*).select(col("doc_id"),
       documentsRowDigest.as("digest"),
-      graft.sources.CorpusFiles.srcCol.as("src"),
-      bckCol(nb).as("bck"))
+      graft.sources.CorpusFiles.srcCol.as("src"))
 
   /** The newest OTHER published generation of `key` that carries a
     * docs sidecar — the delta build's base. Sidecar-less generations
@@ -536,14 +514,12 @@ object ArtifactStore {
   private def priorGeneration(key: String, fp: Long): Option[Long] =
     publishedFps(key)
       .filter(p => p != fp && Files.exists(docsSidecarPath(key, p)))
-      .sortBy(p => Files.getLastModifiedTime(
-        Paths.get(root, key, s"fp-$p", "manifest.json")).toMillis)
       .lastOption
 
   /** Bucket-carry observability (the r12 verdict item 1 "done"
-    * criterion): per key, the last delta build's linked vs rewritten
-    * bucket counts, linked vs written bytes, and the corpus files it
-    * actually scanned. */
+    * criterion): per key, the last partition carry's linked vs
+    * rewritten partition counts, linked vs written bytes, and the
+    * corpus files it actually scanned. */
   case class CarryStat(linkedBuckets: Int, rewrittenBuckets: Int,
                        bytesLinked: Long, bytesWritten: Long,
                        scannedFiles: Seq[String])
@@ -637,20 +613,20 @@ object ArtifactStore {
   }
 
   /** [[writeFilesManifest]] plus the bucket-layout note the
-    * doc-local delta families' dispatch consults. */
+    * partition carry's eligibility check consults. */
   private def writeGenManifest(s: SparkSession, tmp: Path, fp: Long, nb: Int,
                                listing: Seq[(String, Long, Long)],
                                carriedSums: Map[String, Long],
                                freshCert: DataFrame): Unit = {
     writeFilesManifest(s, tmp, fp, listing, carriedSums, freshCert)
     // record the generation's bucket LAYOUT alongside (r13 self-review
-    // finding 1): the bucket-carry path mixes the prior sidecar's bck
+    // finding 1): the partition carry mixes the prior sidecar's bck
     // values with freshly computed ones, which is only sound when both
     // used the same modulus — a modulus change against a same-modulus
     // assumption would link a changed doc's OLD bucket while writing
-    // its fresh rows into the NEW one (silent duplication). The
-    // dispatch below demotes a modulus-mismatched OR unrecorded prior
-    // to the row-level carry.
+    // its fresh rows into the NEW one (silent duplication).
+    // [[partitionCarriable]] demotes a modulus-mismatched OR unrecorded
+    // prior to the row-level carry.
     Files.writeString(tmp.resolve("buckets"), s"$nb\n")
   }
 
@@ -664,273 +640,381 @@ object ArtifactStore {
     else scala.util.Try(Files.readString(p).trim.toInt).toOption
   }
 
+  /** Whether listed corpus file `f` is the one `manifest` recorded
+    * (same size and mtime) — the file-level identity every carry and
+    * the fp cache key on. */
+  private def sameFile(manifest: Map[String, (Long, Long, Long)])
+                      (f: (String, Long, Long)): Boolean =
+    manifest.get(f._1).exists { case (s0, m0, _) => s0 == f._2 && m0 == f._3 }
+
+  /** A corpus listing diffed against a prior generation — the
+    * classification every carry shares (the doc- and vec-local
+    * partition carries and the pair generations). `priorCert` holds at
+    * least (id, digest, src); `certOf` builds the current flat
+    * (id, digest, src) certificate over given corpus files.
+    *
+    *  - file level: files unchanged since the prior's manifest are
+    *    never scanned and carry their digest sums; the rest
+    *    (`deltaPaths`) are scanned into `deltaCert`; every prior file
+    *    that vanished or changed is in `removedOrChanged`;
+    *  - row level: `unvouched` = scanned rows whose (id, digest) the
+    *    prior certificate does not hold — a doc that merely moved
+    *    files keeps its pair and is vouched (a compaction that
+    *    re-files unchanged docs rebuilds nothing);
+    *  - `removed` = prior rows of vanished/changed files that did not
+    *    resurface in the scan AND are not also held by an unchanged
+    *    file (r13 ADVICE, low: a doc duplicated across a deleted file
+    *    and an unchanged one is still in the corpus — removing it
+    *    while the carried certificate keeps its unchanged-src row
+    *    would silently lose rows; reachable only when ids are not
+    *    unique across corpus files. Row MULTIPLICITY for such
+    *    duplicates still differs from a from-scratch build — the carry
+    *    keeps one copy where a full build re-derives per input row —
+    *    the documented residual of keying a carry on row identity). */
+  private final class CarryDiff(idCol: String,
+                                listing: Seq[(String, Long, Long)],
+                                priorManifest: Map[String, (Long, Long, Long)],
+                                priorCert: DataFrame,
+                                certOf: Seq[String] => DataFrame) {
+    private val idDigest = Seq(idCol, "digest").map(col)
+    private val (unchanged, delta) = listing.partition(sameFile(priorManifest))
+    private val unchangedSet = unchanged.map(_._1).toSet
+    val deltaPaths: Seq[String] = delta.map(_._1)
+    val removedOrChanged: Seq[String] =
+      (priorManifest.keySet -- unchangedSet).toSeq.sorted
+    /** The unchanged files' recorded digest sums, for the new manifest. */
+    def carriedSums: Map[String, Long] =
+      priorManifest.collect { case (p, (_, _, sum)) if unchangedSet(p) => p -> sum }
+    /** The prior certificate's rows of unchanged files. */
+    val carriedCert: DataFrame =
+      priorCert.where(!col("src").isin(removedOrChanged: _*))
+    val deltaCert: DataFrame =
+      (if (deltaPaths.isEmpty)
+        priorCert.select(col(idCol), col("digest"), col("src")).limit(0)
+       else certOf(deltaPaths)).localCheckpoint()
+    val unvouched: DataFrame = deltaCert
+      .join(priorCert.select(idDigest: _*), Seq(idCol, "digest"), "left_anti")
+      .localCheckpoint()
+    def removed: DataFrame = priorCert
+      .where(col("src").isin(removedOrChanged: _*))
+      .join(deltaCert.select(idDigest: _*), Seq(idCol, "digest"), "left_anti")
+      .join(carriedCert.select(idDigest: _*), Seq(idCol, "digest"), "left_anti")
+  }
+
+  /** What distinguishes one partition-carried family from another —
+    * everything else about its generations is [[CarryBuild]]:
+    *
+    *  - `idCol`/`partCol`/`sidecar`: the row identity (`doc_id` /
+    *    `vec_id`), the hive partition column of data AND certificate
+    *    (`bck` / `cell`), and the certificate's dir in the generation
+    *    (`docs` / `vecs`);
+    *  - `corpus`: every corpus row the family derives from (full and
+    *    row-level builds; the partition carry reads the scanned delta
+    *    files directly);
+    *  - `certOf`: the flat (id, digest, src) certificate over exactly
+    *    the given corpus files;
+    *  - `derive`: the row-local build — corpus rows to output rows that
+    *    keep `idCol`; every output row must be a pure function of its
+    *    own input row;
+    *  - `buckets`: Some(nb) places every row at `pmod(id, nb)` (docs);
+    *    None takes `partCol` from `derive`'s output, and a certificate
+    *    row takes the partition of the data row it certifies (vecs);
+    *  - `manifest`: writes the generation's `files` manifest from the
+    *    unchanged files' carried sums and the freshly certified rows;
+    *  - `mutable`: published generations are mutated in place (ingest
+    *    stream cell growth, takedown scrubs), so the partition carry
+    *    runs under the prior's mutation lease and also rebuilds
+    *    partitions whose data row count disagrees with the
+    *    certificate. */
+  private final case class CarryLayout(
+      idCol: String, partCol: String, sidecar: String,
+      corpus: () => DataFrame,
+      certOf: Seq[String] => DataFrame,
+      derive: DataFrame => DataFrame,
+      buckets: Option[Int],
+      manifest: (Path, Map[String, Long], DataFrame) => Unit,
+      mutable: Boolean)
+
+  /** One generation of a partition-carried family, built into staging
+    * dir `tmp` from the newest usable `prior` (r11 verdict item 3 — at
+    * 100 TB you cannot re-derive the corpus because 1 GB arrived; r12
+    * verdict item 1 — the carry is PARTITION-LEVEL):
+    *
+    *  - no prior: [[full]] build;
+    *  - a prior without a file manifest (pre-r13), with a flat
+    *    certificate (pre-r14 vecs) or written under a different bucket
+    *    modulus (the corpus crossed a sizing threshold): [[rowCarry]] —
+    *    the rows it vouches for carry, the rest re-derive, and the
+    *    generation comes out in the current layout (one migration
+    *    build, then steady state);
+    *  - otherwise [[partitionCarry]]: O(delta files + touched
+    *    partitions) of I/O, every untouched partition a hard link.
+    *
+    * Data, certificate, file manifest (and the caller's notes) publish
+    * in ONE staging dir → one atomic rename. */
+  private final class CarryBuild(s: SparkSession, key: String, fp: Long,
+                                 tmp: Path, listing: Seq[(String, Long, Long)],
+                                 l: CarryLayout) {
+    import l.{idCol, partCol}
+
+    def run(prior: Option[Long]): Unit =
+      (prior, prior.flatMap(generationManifest(s, key, _))) match {
+        case (Some(pfp), Some(pm)) if partitionCarriable(pfp) =>
+          // a mutable family carries under the PRIOR generation's
+          // mutation lease: the carry hard-links and count-compares the
+          // prior's live files, and (a) an ingest-stream merge rewriting
+          // a partition mid-carry could slip uncertified rows past the
+          // dirty-partition detection into a linked partition, (b) a
+          // takedown scrub mid-carry could erase the prior while our
+          // links pin the pre-scrub bytes into a generation the scrub
+          // cannot see (not yet published). The lease fails the
+          // late-comer loudly; an erasure pass re-runs after the publish
+          // and then enumerates the new generation.
+          if (l.mutable)
+            graft.sources.MutationLease.withLease(s, dataPath(key, pfp)) {
+              partitionCarry(pfp, pm)
+            }
+          else partitionCarry(pfp, pm)
+        case (Some(pfp), _) => rowCarry(pfp)
+        case _ => full()
+      }
+
+    private def priorSidecar(pfp: Long): Path =
+      Paths.get(root, key, s"fp-$pfp", l.sidecar)
+
+    /** The prior's certificate is partitioned by `partCol` and — for
+      * bucketed layouts — was written under the current modulus. */
+    private def partitionCarriable(pfp: Long): Boolean = {
+      import scala.jdk.CollectionConverters._
+      val p = priorSidecar(pfp)
+      Files.isDirectory(p) && {
+        val kids = Files.list(p)
+        try kids.iterator().asScala
+          .exists(_.getFileName.toString.startsWith(s"$partCol="))
+        finally kids.close()
+      } && l.buckets.forall(nb => generationBuckets(key, pfp).contains(nb))
+    }
+
+    /** The row's partition: computed from the id, or the derived
+      * column itself. */
+    private def place: Column = l.buckets.fold(col(partCol).cast(LongType))(
+      nb => pmod(col(idCol), lit(nb.toLong)))
+
+    /** Certificate `rows` with their partition — computed from the id
+      * when bucketed, else looked up on `on` in `from`. */
+    private def located(rows: DataFrame, from: => DataFrame,
+                        on: Seq[String]): DataFrame =
+      if (l.buckets.isDefined) rows.withColumn(partCol, place)
+      else rows.join(from.select(on.map(col) :+
+        col(partCol).cast(LongType).as(partCol): _*), on)
+
+    /** Carried rows (prior data, `fp`/`corpus_fp` dropped) in `fresh`'s
+      * column order; a family that writes an `fp` column gets THIS
+      * generation's. */
+    private def conform(carried: DataFrame, fresh: DataFrame): DataFrame =
+      carried.withColumn(partCol, place).select(fresh.columns.map(c =>
+        if (c == "fp") lit(fp).as(c) else col(c)): _*)
+
+    /** Partitioned write into `tmp/sub`, one task per partition first:
+      * without it every shuffle partition writes a sliver into every
+      * partition it holds — up to tasks×partitions files per
+      * generation, and every consumer query pays the per-file scan
+      * overhead forever. Hash repartitioning never splits equal keys:
+      * ≤1 file per partition per build. */
+    private def writeParts(df: DataFrame, sub: String): Unit =
+      l.buckets.fold(df.repartition(col(partCol)))(
+        nb => df.repartition(nb, col(partCol)))
+        .write.partitionBy(partCol).mode("overwrite")
+        .parquet(tmp.resolve(sub).toString)
+
+    /** The data just written, read back ([[located]] prunes it to
+      * (id, partition)) so the derive runs exactly once. */
+    private def written: DataFrame =
+      s.read.parquet(tmp.resolve("data").toString)
+
+    /** Hard-link every partition of `src` outside `touched` into
+      * `tmp/sub`; returns (partitions, bytes) linked. */
+    private def linkUntouched(src: Path, sub: String,
+                              touched: Set[Long]): (Int, Long) = {
+      import scala.jdk.CollectionConverters._
+      var n = 0
+      var bytes = 0L
+      val kids = Files.list(src)
+      try kids.iterator().asScala.foreach { d =>
+        val name = d.getFileName.toString
+        if (name.startsWith(s"$partCol=") &&
+            !touched(name.stripPrefix(s"$partCol=").toLong)) {
+          bytes += linkDirInto(d, tmp.resolve(sub).resolve(name))
+          n += 1
+        }
+      } finally kids.close()
+      (n, bytes)
+    }
+
+    private def full(): Unit = {
+      val cert = l.certOf(listing.map(_._1)).localCheckpoint()
+      writeParts(l.derive(l.corpus()).withColumn(partCol, place), "data")
+      writeParts(located(cert, written, Seq(idCol)), l.sidecar)
+      l.manifest(tmp, Map.empty, cert)
+      deltaStats.put(key, (-1L, -1L))
+      carryStats.remove(key)
+    }
+
+    /** Row-level carry: split the current certificate against the
+      * prior's into vouched ids (carry their prior rows) and the rest
+      * (re-derive). ONE join materialized once (localCheckpoint) — both
+      * id frames and the stats read the same tagged pass. */
+    private def rowCarry(pfp: Long): Unit = {
+      val cert = l.certOf(listing.map(_._1)).localCheckpoint()
+      val k = Seq(idCol, "digest")
+      val tagged = cert.select(k.map(col): _*)
+        .join(s.read.parquet(priorSidecar(pfp).toString)
+          .select(k.map(col): _*).withColumn("_hit", lit(1)), k, "left")
+        .select(col(idCol), coalesce(col("_hit"), lit(0)).as("_hit"))
+        .localCheckpoint()
+      val byHit = tagged.groupBy(col("_hit")).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      deltaStats.put(key, (byHit.getOrElse(1, 0L), byHit.getOrElse(0, 0L)))
+      def ids(hit: Int) = tagged.where(col("_hit") === hit).select(col(idCol))
+      val fresh = l.derive(l.corpus().join(ids(0), Seq(idCol), "left_semi"))
+        .withColumn(partCol, place)
+      val carried = s.read.parquet(dataPath(key, pfp)).drop("fp", "corpus_fp")
+        .join(ids(1), Seq(idCol), "left_semi")
+      writeParts(fresh.unionByName(conform(carried, fresh)), "data")
+      writeParts(located(cert, written, Seq(idCol)), l.sidecar)
+      l.manifest(tmp, Map.empty, cert)
+      carryStats.remove(key)
+    }
+
+    /** Partition-level carry. Data and certificate are hive-partitioned
+      * by `partCol`; a partition is rewritten only if a changed, new or
+      * removed row lands in it (or, for mutable families, its data
+      * disagrees with its certificate) — every other partition is a
+      * HARD LINK (metadata-priced, zero data I/O). The certificate
+      * derives from the prior's plus a scan of ONLY the new/changed
+      * corpus files ([[CarryDiff]]). A partition whose rows merely
+      * MOVED files relinks its data and rewrites only its certificate
+      * partition (src changed, rows didn't).
+      *
+      * **`fp` data-column caveat (r13 ADVICE, low):** hard-linked
+      * partitions are the PRIOR generation's bytes, so a family that
+      * writes an `fp` column keeps the prior generation's value in them
+      * inside the `fp-<new>` directory. The DIRECTORY name is the
+      * generation's identity; the column is not, and no consumer may
+      * filter on it (none does: the reads drop it, and no oracle reads
+      * a delta-carried family's glob). */
+    private def partitionCarry(pfp: Long,
+                               pm: Map[String, (Long, Long, Long)]): Unit = {
+      val priorCert = s.read.parquet(priorSidecar(pfp).toString)
+        .select(col(idCol), col("digest"), col("src"),
+          col(partCol).cast(LongType).as(partCol))
+      val d = new CarryDiff(idCol, listing, pm, priorCert, l.certOf)
+      val changedIds = d.unvouched.select(col(idCol))
+      val removed = d.removed.select(col(idCol), col(partCol)).localCheckpoint()
+      val fresh = {
+        val f = l.derive(
+          (if (d.deltaPaths.isEmpty) l.corpus().limit(0)
+           else s.read.parquet(d.deltaPaths: _*))
+            .join(changedIds, Seq(idCol), "left_semi"))
+          .withColumn(partCol, place)
+        // a derived partition is read by the touched set, the
+        // certificate and the write: run the derive once
+        if (l.buckets.isEmpty) f.localCheckpoint() else f
+      }
+      // the scanned rows' certificate: an id with any unvouched row is
+      // re-derived whole and takes its fresh partition (a vec_id
+      // scanned with two different vectors — a violation of the
+      // immutable-id contract — must not keep a vouched row's old
+      // placement beside its fresh one); a vouched row keeps its prior
+      // partition
+      val freshCert = located(
+        d.deltaCert.join(changedIds, Seq(idCol), "left_semi"), fresh, Seq(idCol))
+      val vouchedCert = located(
+        d.deltaCert.join(changedIds, Seq(idCol), "left_anti"),
+        priorCert.dropDuplicates(idCol, "digest"), Seq(idCol, "digest"))
+      def parts(df: DataFrame): Set[Long] = df.select(col(partCol)).distinct()
+        .collect().map(_.getLong(0)).toSet
+      // dirty = partitions whose data row count disagrees with the
+      // certificate: stream-grown (uncertified) rows live there —
+      // rebuild so the delta generation equals a from-scratch build
+      // (streamed rows re-derive when ops appends them to the corpus;
+      // they are never carried)
+      val dirty = if (!l.mutable) Set.empty[Long] else {
+        def counts(df: DataFrame) = df.groupBy(col(partCol).cast(LongType))
+          .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val (dc, cc) = (counts(s.read.parquet(dataPath(key, pfp))),
+          counts(priorCert))
+        (dc.keySet ++ cc.keySet).filter(c =>
+          dc.getOrElse(c, 0L) != cc.getOrElse(c, 0L))
+      }
+      val touchedData = parts(freshCert) ++ parts(removed) ++ dirty
+      val touchedCert = touchedData ++ parts(vouchedCert)
+      // --- data: touched partitions = fresh rows + the certified
+      // survivors (never a changed, removed or uncertified row); links
+      // for the rest
+      val kept =
+        if (touchedData.isEmpty) fresh.limit(0)
+        else {
+          val keptIds = priorCert.where(col(partCol).isin(touchedData.toSeq: _*))
+            .join(changedIds, Seq(idCol), "left_anti")
+            .join(removed.select(col(idCol)), Seq(idCol), "left_anti")
+            .select(col(idCol))
+          conform(s.read.parquet(dataPath(key, pfp))
+            .where(col(partCol).isin(touchedData.toSeq: _*)) // partition prune
+            .drop("fp", "corpus_fp")
+            .join(keptIds, Seq(idCol), "left_semi"), fresh)
+        }
+      writeParts(fresh.unionByName(kept), "data")
+      val (linked, linkedBytes) =
+        linkUntouched(Paths.get(dataPath(key, pfp)), "data", touchedData)
+      // --- certificate: the current corpus's rows for touched
+      // partitions (the scanned delta's and the unchanged files'); links
+      // for the rest (their rows all sit in unchanged files, or the
+      // partition would be touched)
+      writeParts(freshCert.unionByName(vouchedCert).unionByName(d.carriedCert)
+        .where(col(partCol).isin(touchedCert.toSeq: _*)), l.sidecar)
+      linkUntouched(priorSidecar(pfp), l.sidecar, touchedCert)
+      l.manifest(tmp, d.carriedSums, d.deltaCert)
+      val nChanged = d.unvouched.count()
+      deltaStats.put(key,
+        (d.deltaCert.count() + d.carriedCert.count() - nChanged, nChanged))
+      carryStats.put(key, CarryStat(
+        linkedBuckets = linked,
+        rewrittenBuckets = touchedData.size,
+        bytesLinked = linkedBytes,
+        bytesWritten = dirBytes(tmp.resolve("data")) - linkedBytes,
+        scannedFiles = d.deltaPaths))
+    }
+  }
+
   /** [[documentsArtifact]] for CORPUS-LINEAR, DOC-LOCAL families
     * (every output row is a pure function of its own document's
     * content — shingle hashes, minhash signatures): generation N+1 is
-    * built from generation N plus the document delta instead of
-    * re-deriving the whole corpus (r11 verdict item 3 — at 100 TB you
-    * cannot re-shingle the corpus because 1 GB arrived), and — r12
-    * verdict item 1 — the carry is PARTITION-LEVEL: data and
-    * certificate are hive-partitioned by `bck = doc_id mod
-    * [[bucketsFor]]`, buckets untouched by the delta are HARD-LINKED
-    * from the prior generation (metadata-priced, zero data I/O), and
-    * the carry certificate derives from the prior generation's file
-    * manifest plus a scan of ONLY the new/changed corpus files. Per
-    * append the I/O is therefore O(delta files + touched buckets):
-    *
-    *  - file level: the prior generation's `files` manifest names the
-    *    corpus files it derived from; files unchanged (path+size+mtime)
-    *    contribute their certificate rows and digest sums verbatim,
-    *    only new/changed files are scanned ([[graft.sources
-    *    .CorpusFiles]]);
-    *  - row level, within the scanned delta: docs whose (doc_id,
-    *    digest) matches the prior certificate are carries (a
-    *    compaction that re-files unchanged docs rebuilds nothing),
-    *    the rest run `buildFor`; removed docs drop out;
-    *  - bucket level: a bucket is rewritten only if a changed, new, or
-    *    removed doc lands in it — everything else is a hard link. A
-    *    bucket whose docs merely MOVED files relinks its data and
-    *    rewrites only its certificate partition (src changed, rows
-    *    didn't).
-    *
-    * Certificate, file manifest, and data publish in ONE staging dir →
-    * one atomic rename (strictly stronger than the r12
-    * ensure-after-publish self-healing). Prior generations without a
-    * file manifest (pre-r13) delta through the row-level fallback and
-    * come out in the new layout — one migration build, then steady
-    * state. The PAIR-local families (brute_pair_stats_v1,
+    * built from generation N plus the document delta by [[CarryBuild]],
+    * with data and certificate partitioned by `bck = doc_id mod
+    * [[bucketsFor]]`. The PAIR-local families (brute_pair_stats_v1,
     * banded_cand_nmatch_v1, the pair stores) cannot ride this carry —
     * their rows name two documents — and instead append through
-    * [[documentsPairArtifact]]'s pure-append algebra.
-    *
-    * **`fp` data-column caveat (r13 ADVICE, low):** hard-linked
-    * untouched buckets are the PRIOR generation's bytes, so their rows
-    * retain the prior generation's `fp` column value inside the
-    * `fp-<new>` directory. For delta-carried families the DIRECTORY
-    * name is the generation's identity; the `fp` column is not, and no
-    * consumer may filter on it (none does: this read drops it, and no
-    * oracle reads a delta-carried family's glob — the fp-filtered
-    * oracle globs all target full-rebuild [[parquetOnce]] model-state
-    * families, where the column is exact). Any future direct reader of
-    * [[dataPath]] for these keys must drop `fp` the same way. */
+    * [[documentsPairArtifact]]'s pure-append algebra. */
   def documentsDeltaArtifact(s: SparkSession, dir: String, key: String)
                             (buildFor: DataFrame => DataFrame): DataFrame = {
     val fp = documentsFp(s, dir)
     val dataDir = publishOnce(s, key, fp) { tmp =>
       val listing = graft.sources.CorpusFiles.list(s, dir, "documents")
       val nb = bucketsFor(listing.map(_._2).sum)
-      val hfs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val prior = priorGeneration(key, fp)
-      val priorManifest = prior.flatMap { pfp =>
-        graft.sources.CorpusFiles.readManifest(hfs,
-          new org.apache.hadoop.fs.Path(filesManifestPath(key, pfp).toString))
-      }
-      (prior, priorManifest) match {
-        case (Some(pfp), Some(pm))
-          if generationBuckets(key, pfp).contains(nb) =>
-          bucketCarryBuild(s, dir, key, fp, nb, tmp, pfp, pm, listing)(buildFor)
-        case (Some(pfp), _) =>
-          // pre-r13 prior (no manifest), a prior written under a
-          // DIFFERENT bucket modulus (corpus crossed a sizing
-          // threshold), or an unrecorded one: bucket dirs don't align,
-          // so the carry demotes to row level — one migration build in
-          // the new layout, then steady state
-          rowCarryBuild(s, dir, key, fp, nb, tmp, pfp, listing)(buildFor)
-        case _ =>
-          fullBuild(s, dir, key, fp, nb, tmp, listing)(buildFor)
-      }
+      new CarryBuild(s, key, fp, tmp, listing, CarryLayout(
+        idCol = "doc_id", partCol = "bck", sidecar = "docs",
+        corpus = () => Tables.documents(s, dir),
+        certOf = docCertFrame(s, _),
+        derive = buildFor(_).withColumn("fp", lit(fp)),
+        buckets = Some(nb),
+        manifest = writeGenManifest(s, _, fp, nb, listing, _, _),
+        mutable = false)).run(priorGeneration(key, fp))
     }
     s.read.parquet(dataDir).drop("fp").drop("bck")
   }
 
-  /** One task per bucket before a bucketed write: without it every
-    * shuffle partition writes a sliver into every bucket it holds —
-    * up to tasks×buckets files per generation, and every consumer
-    * query pays the per-file scan overhead forever. One bounded
-    * shuffle at build time buys ≤1 file per bucket per build. */
-  private def byBucket(df: DataFrame, nb: Int): DataFrame =
-    df.repartition(nb, col("bck"))
-
-  private def fullBuild(s: SparkSession, dir: String, key: String, fp: Long,
-                        nb: Int, tmp: Path, listing: Seq[(String, Long, Long)])
-                       (buildFor: DataFrame => DataFrame): Unit = {
-    val cert = docCertFrame(s, listing.map(_._1), nb).localCheckpoint()
-    byBucket(buildFor(Tables.documents(s, dir))
-      .withColumn("bck", bckCol(nb)).withColumn("fp", lit(fp)), nb)
-      .write.partitionBy("bck").mode("overwrite")
-      .parquet(tmp.resolve("data").toString)
-    byBucket(cert, nb).write.partitionBy("bck").mode("overwrite")
-      .parquet(tmp.resolve("docs").toString)
-    writeGenManifest(s, tmp, fp, nb, listing, Map.empty, cert)
-    deltaStats.put(key, (-1L, -1L))
-    carryStats.remove(key)
-  }
-
-  private def rowCarryBuild(s: SparkSession, dir: String, key: String,
-                            fp: Long, nb: Int, tmp: Path, pfp: Long,
-                            listing: Seq[(String, Long, Long)])
-                           (buildFor: DataFrame => DataFrame): Unit = {
-    val cert = docCertFrame(s, listing.map(_._1), nb).localCheckpoint()
-    val priorKeys = s.read.parquet(docsSidecarPath(key, pfp).toString)
-      .select(col("doc_id"), col("digest"))
-    val (unchangedIds, changedIds, _) =
-      deltaSplit(key, "doc_id", cert.select(col("doc_id"), col("digest")),
-        priorKeys)
-    val fresh = buildFor(
-      Tables.documents(s, dir).join(changedIds, Seq("doc_id"), "left_semi"))
-      .withColumn("bck", bckCol(nb)).withColumn("fp", lit(fp))
-    val priorData = s.read.parquet(dataPath(key, pfp)).drop("fp")
-    val carried = (if (priorData.columns.contains("bck"))
-      priorData.drop("bck") else priorData)
-      .join(unchangedIds, Seq("doc_id"), "left_semi")
-      .withColumn("bck", bckCol(nb)).withColumn("fp", lit(fp))
-    byBucket(fresh.unionByName(carried.select(fresh.columns.map(col): _*)), nb)
-      .write.partitionBy("bck").mode("overwrite")
-      .parquet(tmp.resolve("data").toString)
-    byBucket(cert, nb).write.partitionBy("bck").mode("overwrite")
-      .parquet(tmp.resolve("docs").toString)
-    writeGenManifest(s, tmp, fp, nb, listing, Map.empty, cert)
-    carryStats.remove(key)
-  }
-
-  private def bucketCarryBuild(s: SparkSession, dir: String, key: String,
-                               fp: Long, nb: Int, tmp: Path, pfp: Long,
-                               priorManifest: Map[String, (Long, Long, Long)],
-                               listing: Seq[(String, Long, Long)])
-                              (buildFor: DataFrame => DataFrame): Unit = {
-    import scala.jdk.CollectionConverters._
-    val (unchanged, delta) = listing.partition { case (p, sz, mt) =>
-      priorManifest.get(p).exists { case (s0, m0, _) => s0 == sz && m0 == mt }
-    }
-    val removedOrChanged =
-      (priorManifest.keySet -- unchanged.map(_._1)).toSeq.sorted
-    val deltaPaths = delta.map(_._1)
-    val priorSidecar = s.read.parquet(docsSidecarPath(key, pfp).toString)
-      .select(col("doc_id"), col("digest"), col("src"),
-        col("bck").cast(LongType).as("bck"))
-    val deltaKeys =
-      (if (deltaPaths.isEmpty) priorSidecar.limit(0)
-       else docCertFrame(s, deltaPaths, nb)).localCheckpoint()
-    // changed = scanned docs the prior certificate cannot vouch for;
-    // a doc that merely moved files keeps its (doc_id, digest) pair
-    val changedIds = deltaKeys
-      .join(priorSidecar.select(col("doc_id"), col("digest")),
-        Seq("doc_id", "digest"), "left_anti")
-      .select(col("doc_id"), col("bck")).localCheckpoint()
-    // removed = prior docs of vanished/changed files that did not
-    // resurface in the scan AND are not also held by an unchanged file
-    // (r13 ADVICE, low: a doc duplicated across a deleted file and an
-    // unchanged one is still in the corpus — anti-joining it out of the
-    // rebuilt bucket while the carried certificate keeps its
-    // unchanged-src row would silently lose rows; reachable only when
-    // doc_id is not unique across corpus files. Row MULTIPLICITY for
-    // such duplicates still differs from a from-scratch build — the
-    // carry keeps one copy where a full build re-derives per input row
-    // — the documented residual of keying a carry on doc identity)
-    val removedIds = priorSidecar
-      .where(col("src").isin(removedOrChanged: _*))
-      .join(deltaKeys.select(col("doc_id"), col("digest")),
-        Seq("doc_id", "digest"), "left_anti")
-      .join(priorSidecar.where(!col("src").isin(removedOrChanged: _*))
-        .select(col("doc_id"), col("digest")),
-        Seq("doc_id", "digest"), "left_anti")
-      .select(col("doc_id"), col("bck")).localCheckpoint()
-    def bcks(df: DataFrame): Set[Long] = df.select(col("bck")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val touchedData = bcks(changedIds) ++ bcks(removedIds)
-    val touchedCert = touchedData ++ bcks(deltaKeys) // moved docs: new src
-    // --- data: rebuild touched buckets, hard-link the rest
-    val changedDocs =
-      (if (deltaPaths.isEmpty) Tables.documents(s, dir).limit(0)
-       else s.read.parquet(deltaPaths: _*))
-        .join(changedIds.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val fresh = buildFor(changedDocs)
-      .withColumn("bck", bckCol(nb)).withColumn("fp", lit(fp))
-    val keepInTouched =
-      (if (touchedData.isEmpty) fresh.limit(0)
-       else {
-         val p = s.read.parquet(dataPath(key, pfp)).drop("fp")
-           .where(col("bck").isin(touchedData.toSeq: _*)) // partition prune
-           .join(changedIds.select(col("doc_id")), Seq("doc_id"), "left_anti")
-           .join(removedIds.select(col("doc_id")), Seq("doc_id"), "left_anti")
-           .withColumn("bck", col("bck").cast(LongType))
-           .withColumn("fp", lit(fp))
-         p.select(fresh.columns.map(col): _*)
-       })
-    byBucket(fresh.unionByName(keepInTouched), nb)
-      .write.partitionBy("bck").mode("overwrite")
-      .parquet(tmp.resolve("data").toString)
-    var linkedBytes = 0L
-    var linked = 0
-    val priorDataDir = Paths.get(dataPath(key, pfp))
-    val kids = Files.list(priorDataDir)
-    try kids.iterator().asScala.foreach { d =>
-      val n = d.getFileName.toString
-      if (n.startsWith("bck=") &&
-          !touchedData(n.stripPrefix("bck=").toLong)) {
-        linkedBytes += linkDirInto(d, tmp.resolve("data").resolve(n))
-        linked += 1
-      }
-    } finally kids.close()
-    // --- certificate: current corpus rows for touched buckets, links
-    // for the rest (their docs all sit in unchanged files, or the
-    // bucket would be touched)
-    val certTouched = deltaKeys
-      .where(col("bck").isin(touchedCert.toSeq: _*))
-      .unionByName(priorSidecar
-        .where(!col("src").isin(removedOrChanged: _*))
-        .where(col("bck").isin(touchedCert.toSeq: _*)))
-    byBucket(certTouched, nb).write.partitionBy("bck").mode("overwrite")
-      .parquet(tmp.resolve("docs").toString)
-    val priorDocsDir = docsSidecarPath(key, pfp)
-    val dk = Files.list(priorDocsDir)
-    try dk.iterator().asScala.foreach { d =>
-      val n = d.getFileName.toString
-      if (n.startsWith("bck=") && !touchedCert(n.stripPrefix("bck=").toLong))
-        linkDirInto(d, tmp.resolve("docs").resolve(n))
-    } finally dk.close()
-    // --- manifest: carried sums for unchanged files, fresh sums for
-    // the scanned delta
-    val unchangedSet = unchanged.map(_._1).toSet
-    writeGenManifest(s, tmp, fp, nb, listing,
-      priorManifest.collect { case (p, (_, _, sum))
-        if unchangedSet(p) => p -> sum },
-      deltaKeys.select(col("src"), col("digest")))
-    // --- stats: deltaStats keeps its (carried, rebuilt) meaning;
-    // carryStats adds the bucket/byte pin
-    val nChanged = changedIds.count()
-    val nCur = deltaKeys.count() +
-      priorSidecar.where(!col("src").isin(removedOrChanged: _*)).count()
-    deltaStats.put(key, (nCur - nChanged, nChanged))
-    carryStats.put(key, CarryStat(
-      linkedBuckets = linked,
-      rewrittenBuckets = touchedData.size,
-      bytesLinked = linkedBytes,
-      bytesWritten = dirBytes(tmp.resolve("data")) - linkedBytes,
-      scannedFiles = deltaPaths))
-  }
-
   // ------------------------------------------- vec cell-carried generations
-
-  /** The embeddings-side twin of the docs sidecar: the (vec_id, digest,
-    * src, cell) carry certificate, hive-partitioned by the SAME `cell`
-    * as the data. */
-  private def vecsSidecarPathOf(key: String, fp: Long): Path =
-    Paths.get(root, key, s"fp-$fp", "vecs")
-
-  /** Whether a generation's vecs certificate is cell-partitioned (the
-    * r14 layout) — the cell-carry's eligibility check; flat pre-r14
-    * sidecars demote to the row-level carry for one migration build. */
-  private def vecsCellPartitioned(key: String, fp: Long): Boolean = {
-    import scala.jdk.CollectionConverters._
-    val p = vecsSidecarPathOf(key, fp)
-    if (!Files.isDirectory(p)) return false
-    val kids = Files.list(p)
-    try kids.iterator().asScala.exists(
-      _.getFileName.toString.startsWith("cell="))
-    finally kids.close()
-  }
 
   /** Tombstone-filtered (vec_id, digest, src) certificate over exactly
     * `paths` — [[embeddingsCarryDigest]] (order-sensitive), so a
@@ -943,17 +1027,13 @@ object ArtifactStore {
       .join(broadcast(graft.sources.VecTakedown.tombstones(s, dir)),
         Seq("vec_id"), "left_anti")
 
-  /** One task per cell before a cell-partitioned write (the byBucket
-    * lesson): hash repartitioning never splits equal keys, so each cell
-    * directory gets at most one file per writing task group instead of
-    * tasks×cells slivers. */
-  private def byCell(df: DataFrame): DataFrame = df.repartition(col("cell"))
-
   /** The generation's embeddings file manifest, copied from the global
     * fp cache (validated against the current listing by the
     * [[embeddingsFp]] call that keyed this build) and re-sum-guarded:
     * entries must re-sum to `corpusFp`, or the corpus mutated mid-build
-    * and the generation would be mislabeled. */
+    * and the generation would be mislabeled. The vec certificate's
+    * digest is order-sensitive, not the fingerprint's, so the sums
+    * cannot derive from it. */
   private def writeVecManifest(s: SparkSession, tmp: Path, dir: String,
                                corpusFp: Long,
                                listing: Seq[(String, Long, Long)]): Unit = {
@@ -981,42 +1061,28 @@ object ArtifactStore {
 
   /** CELL-PARTITIONED, partition-carried generations for VEC-LOCAL
     * embedding-derived families — the serve cells and the residual-PQ
-    * code index (r13 verdict item 1, the top_next): every output row is
-    * a pure function of its own vector GIVEN the frozen books, so a
-    * corpus append under kept books must cost O(delta vectors + touched
-    * cells), not a full carried-row + certificate rewrite. The docs-side
-    * [[documentsDeltaArtifact]] carry applied to the embeddings table,
-    * with `cell` (the coarse assignment — already the data's partition
-    * key for serve-side pruning) as the carry partition:
+    * code index (r13 verdict item 1): every output row is a pure
+    * function of its own vector GIVEN the frozen books, so a corpus
+    * append under kept books costs O(delta vectors + touched cells).
+    * The same [[CarryBuild]] as [[documentsDeltaArtifact]], with `cell`
+    * (the coarse assignment — already the data's partition key for
+    * serve-side pruning) as the carry partition, the order-sensitive
+    * tombstone-filtered certificate, and the expensive per-row derive
+    * (the IVFADC argmin) running over the delta only. Published
+    * generations are MUTABLE: rows GROWN by the ingest stream
+    * ([[graft.streaming.StreamAnnCells]]) are uncertified, so their
+    * cells rebuild rather than link (they re-derive when ops appends
+    * them to the corpus — full-build equality holds), and the carry
+    * holds the prior's mutation lease.
     *
-    *  - file level: the generation's `files` manifest names the
-    *    embeddings files it derived from; unchanged files are never
-    *    scanned (the fingerprint itself is file-incremental via
-    *    [[fpOf]]'s cache);
-    *  - row level: scanned vectors whose (vec_id, order-sensitive
-    *    digest) matches the prior certificate are carries; the rest
-    *    re-encode (the expensive per-row derive — the IVFADC argmin —
-    *    runs over the delta only);
-    *  - cell level: a cell is rewritten only when a changed/new vector
-    *    lands in it, a removed/changed vector must leave it, or its
-    *    data row count disagrees with its certificate (rows GROWN by
-    *    the ingest stream — [[graft.streaming.StreamAnnCells]] — are
-    *    uncertified and are re-derived when ops appends them to the
-    *    corpus, never carried: full-build equality holds). Every other
-    *    cell is a HARD LINK — metadata-priced.
-    *
-    * Data, certificate ((vec_id, digest, src, cell), cell-partitioned
-    * and itself partition-carried), file manifest, `corpus` note, and
-    * the family's book notes publish in ONE staging dir → one atomic
-    * rename. Rows carry NO `fp`/`corpus_fp` columns in this layout —
-    * the directory name and the `corpus` note are the generation's
-    * identity (the hard-linked files of a carried generation would
-    * otherwise disagree with it — the documented fp-column caveat made
-    * structural). Prior generations in the flat pre-r14 layout demote
-    * to a row-level carry for one migration build; no prior builds
-    * full. `prior` must be the newest generation under the SAME books
-    * (the caller's digest match) — carrying across books would mix
-    * incommensurable cells.
+    * Data, certificate ((vec_id, digest, src, cell)), file manifest,
+    * `corpus` note, and the family's book notes publish in ONE staging
+    * dir → one atomic rename. Rows carry NO `fp`/`corpus_fp` columns
+    * in this layout — the directory name and the `corpus` note are the
+    * generation's identity (the hard-linked files of a carried
+    * generation would otherwise disagree with it). `prior` must be the
+    * newest generation under the SAME books (the caller's digest match)
+    * — carrying across books would mix incommensurable cells.
     *
     * `encode` maps raw embeddings rows to output rows and MUST be
     * row-local given the books, emit a long `cell` column, and keep
@@ -1029,35 +1095,14 @@ object ArtifactStore {
     val corpusFp = embeddingsFp(s, dir)
     publishOnce(s, key, fp) { tmp =>
       val listing = graft.sources.CorpusFiles.list(s, dir, "embeddings")
-      val hfs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val p = prior
-      val priorManifest = p.flatMap { pfp =>
-        graft.sources.CorpusFiles.readManifest(hfs,
-          new org.apache.hadoop.fs.Path(
-            filesManifestPath(key, pfp).toString))
-      }
-      (p, priorManifest) match {
-        case (Some(pfp), Some(pm)) if vecsCellPartitioned(key, pfp) =>
-          // under the PRIOR generation's mutation lease: the carry
-          // hard-links and count-compares the prior's live files, and
-          // (a) an ingest-stream merge rewriting a cell mid-carry could
-          // slip uncertified rows past the dirty-cell detection into a
-          // linked cell, (b) a takedown scrub mid-carry could erase the
-          // prior while our links pin the pre-scrub bytes into a
-          // generation the scrub cannot see (not yet published). The
-          // lease fails the late-comer loudly; an erasure pass re-runs
-          // after the publish and then enumerates the new generation.
-          graft.sources.MutationLease.withLease(s, dataPath(key, pfp)) {
-            vecCellCarryBuild(s, dir, key, fp, corpusFp, tmp, pfp, pm,
-              listing)(encode)
-          }
-        case (Some(pfp), _) =>
-          vecRowCarryBuild(s, dir, key, fp, corpusFp, tmp, pfp,
-            listing)(encode)
-        case _ =>
-          vecFullBuild(s, dir, key, fp, corpusFp, tmp, listing)(encode)
-      }
+      new CarryBuild(s, key, fp, tmp, listing, CarryLayout(
+        idCol = "vec_id", partCol = "cell", sidecar = "vecs",
+        corpus = () => graft.sources.VecTakedown.servedEmbeddings(s, dir),
+        certOf = vecCertFrame(s, dir, _),
+        derive = encode,
+        buckets = None,
+        manifest = (t, _, _) => writeVecManifest(s, t, dir, corpusFp, listing),
+        mutable = true)).run(prior)
       notes(tmp)
       Files.writeString(tmp.resolve("corpus"), s"$corpusFp\n")
     }
@@ -1076,192 +1121,6 @@ object ArtifactStore {
         .collect().headOption.map(_.getLong(0))).toOption.flatten
   }
 
-  private def vecFullBuild(s: SparkSession, dir: String, key: String,
-                           fp: Long, corpusFp: Long, tmp: Path,
-                           listing: Seq[(String, Long, Long)])
-                          (encode: DataFrame => DataFrame): Unit = {
-    val served = graft.sources.VecTakedown.servedEmbeddings(s, dir)
-    byCell(encode(served)).write.partitionBy("cell").mode("overwrite")
-      .parquet(tmp.resolve("data").toString)
-    // cert cells come off the WRITTEN data (column-pruned read-back),
-    // so the expensive encode runs exactly once
-    val written = s.read.parquet(tmp.resolve("data").toString)
-      .select(col("vec_id"), col("cell").cast(LongType).as("cell"))
-    val cert = vecCertFrame(s, dir, listing.map(_._1))
-      .join(written, Seq("vec_id"))
-    byCell(cert).write.partitionBy("cell").mode("overwrite")
-      .parquet(tmp.resolve("vecs").toString)
-    writeVecManifest(s, tmp, dir, corpusFp, listing)
-    deltaStats.put(key, (-1L, -1L))
-    carryStats.remove(key)
-  }
-
-  /** The migration build: a prior with a flat (vec_id, digest)
-    * certificate carries at row level once and comes out in the
-    * cell-partitioned layout. */
-  private def vecRowCarryBuild(s: SparkSession, dir: String, key: String,
-                               fp: Long, corpusFp: Long, tmp: Path,
-                               pfp: Long, listing: Seq[(String, Long, Long)])
-                              (encode: DataFrame => DataFrame): Unit = {
-    val served = graft.sources.VecTakedown.servedEmbeddings(s, dir)
-    val curKeys = vecCertFrame(s, dir, listing.map(_._1)).localCheckpoint()
-    val priorKeys = s.read.parquet(vecsSidecarPathOf(key, pfp).toString)
-      .select(col("vec_id"), col("digest"))
-    val (unchangedIds, changedIds, _) = deltaSplit(key, "vec_id",
-      curKeys.select(col("vec_id"), col("digest")), priorKeys)
-    val fresh = encode(served.join(changedIds, Seq("vec_id"), "left_semi"))
-    val carried = s.read.parquet(dataPath(key, pfp))
-      .drop("fp").drop("corpus_fp")
-      .join(unchangedIds, Seq("vec_id"), "left_semi")
-      .withColumn("cell", col("cell").cast(LongType))
-    byCell(fresh.unionByName(carried.select(fresh.columns.map(col): _*)))
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(tmp.resolve("data").toString)
-    val written = s.read.parquet(tmp.resolve("data").toString)
-      .select(col("vec_id"), col("cell").cast(LongType).as("cell"))
-    byCell(curKeys.join(written, Seq("vec_id")))
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(tmp.resolve("vecs").toString)
-    writeVecManifest(s, tmp, dir, corpusFp, listing)
-    carryStats.remove(key)
-  }
-
-  private def vecCellCarryBuild(s: SparkSession, dir: String, key: String,
-                                fp: Long, corpusFp: Long, tmp: Path,
-                                pfp: Long,
-                                priorManifest: Map[String, (Long, Long, Long)],
-                                listing: Seq[(String, Long, Long)])
-                               (encode: DataFrame => DataFrame): Unit = {
-    import scala.jdk.CollectionConverters._
-    val (unchanged, delta) = listing.partition { case (p0, sz, mt) =>
-      priorManifest.get(p0).exists { case (s0, m0, _) => s0 == sz && m0 == mt }
-    }
-    val removedOrChanged =
-      (priorManifest.keySet -- unchanged.map(_._1)).toSeq.sorted
-    val deltaPaths = delta.map(_._1)
-    val priorCert = s.read.parquet(vecsSidecarPathOf(key, pfp).toString)
-      .select(col("vec_id"), col("digest"), col("src"),
-        col("cell").cast(LongType).as("cell"))
-    val deltaCert =
-      (if (deltaPaths.isEmpty)
-        priorCert.select(col("vec_id"), col("digest"), col("src")).limit(0)
-       else vecCertFrame(s, dir, deltaPaths)).localCheckpoint()
-    // changed/new = scanned vectors the prior certificate cannot vouch for
-    val changedIds = deltaCert
-      .join(priorCert.select(col("vec_id"), col("digest")),
-        Seq("vec_id", "digest"), "left_anti")
-      .select(col("vec_id")).localCheckpoint()
-    // removed = prior vecs of vanished/changed files that did not
-    // resurface and are not also held by an unchanged file (the docs-side
-    // duplicate fix mirrored); includes CHANGED vecs' old rows — their
-    // old cell may differ from the new assignment and must rewrite
-    val removed = priorCert
-      .where(col("src").isin(removedOrChanged: _*))
-      .join(deltaCert.select(col("vec_id"), col("digest")),
-        Seq("vec_id", "digest"), "left_anti")
-      .join(priorCert.where(!col("src").isin(removedOrChanged: _*))
-        .select(col("vec_id"), col("digest")),
-        Seq("vec_id", "digest"), "left_anti")
-      .select(col("vec_id"), col("cell")).localCheckpoint()
-    // moved = same (vec_id, digest), new file: the cert row rewrites
-    // with the live src (future removal detection keys on it); the
-    // DATA row is untouched (same vector, same cell). Ids that ALSO
-    // appear with a changed digest (same vec_id, different vectors
-    // across delta files — a violation of the immutable-id contract)
-    // are excluded: the fresh row wins whole, or the certificate would
-    // hold contradictory digests for one id and a later revert could
-    // carry the wrong bytes
-    val moved = deltaCert
-      .join(priorCert.select(col("vec_id"), col("digest"), col("cell")),
-        Seq("vec_id", "digest"))
-      .join(changedIds, Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("digest"), col("src"), col("cell"))
-      .dropDuplicates(Seq("vec_id", "digest"))
-      .localCheckpoint()
-    // fresh assignments: the expensive encode over the changed rows only
-    val fresh = (
-      if (deltaPaths.isEmpty)
-        encode(Tables.embeddings(s, dir).limit(0))
-      else encode(s.read.parquet(deltaPaths: _*)
-        .join(changedIds, Seq("vec_id"), "left_semi"))
-      ).localCheckpoint()
-    def cellsOf(df: DataFrame): Set[Long] = df.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    // dirty = cells whose data row count disagrees with the certificate:
-    // stream-grown (uncertified) rows live there — rebuild so the delta
-    // generation equals a from-scratch build (streamed rows re-derive
-    // when ops appends them to the corpus; they are never carried)
-    val priorDataPath = dataPath(key, pfp)
-    val dataCounts = s.read.parquet(priorDataPath)
-      .groupBy(col("cell").cast(LongType).as("cell")).count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val certCounts = priorCert.groupBy(col("cell")).count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dirty = (dataCounts.keySet ++ certCounts.keySet).filter(c =>
-      dataCounts.getOrElse(c, 0L) != certCounts.getOrElse(c, 0L))
-    val touchedData = cellsOf(fresh) ++ cellsOf(
-      removed.select(col("cell"))) ++ dirty
-    val touchedCert = touchedData ++ cellsOf(moved.select(col("cell")))
-    // --- data: rebuild touched cells (fresh + certified survivors),
-    // hard-link the rest
-    val keptIds = priorCert
-      .where(col("cell").isin(touchedData.toSeq: _*))
-      .join(changedIds, Seq("vec_id"), "left_anti")
-      .join(removed.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"))
-    val keptData =
-      (if (touchedData.isEmpty) fresh.limit(0)
-       else s.read.parquet(priorDataPath)
-         .where(col("cell").isin(touchedData.toSeq: _*)) // partition prune
-         .drop("fp").drop("corpus_fp")
-         .join(keptIds, Seq("vec_id"), "left_semi")
-         .withColumn("cell", col("cell").cast(LongType))
-         .select(fresh.columns.map(col): _*))
-    byCell(fresh.unionByName(keptData))
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(tmp.resolve("data").toString)
-    var linkedBytes = 0L
-    var linked = 0
-    val dk = Files.list(Paths.get(priorDataPath))
-    try dk.iterator().asScala.foreach { d =>
-      val n = d.getFileName.toString
-      if (n.startsWith("cell=") &&
-          !touchedData(n.stripPrefix("cell=").toLong)) {
-        linkedBytes += linkDirInto(d, tmp.resolve("data").resolve(n))
-        linked += 1
-      }
-    } finally dk.close()
-    // --- certificate: fresh + moved + certified survivors in touched
-    // cells; links for the rest
-    val keptCert = priorCert
-      .where(col("cell").isin(touchedCert.toSeq: _*))
-      .join(changedIds, Seq("vec_id"), "left_anti")
-      .join(removed.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .join(moved.select(col("vec_id")), Seq("vec_id"), "left_anti")
-    val freshCert = deltaCert
-      .join(changedIds, Seq("vec_id"), "left_semi")
-      .join(fresh.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      .select(col("vec_id"), col("digest"), col("src"), col("cell"))
-    byCell(freshCert.unionByName(moved)
-        .unionByName(keptCert.select(freshCert.columns.map(col): _*)))
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(tmp.resolve("vecs").toString)
-    val ck = Files.list(vecsSidecarPathOf(key, pfp))
-    try ck.iterator().asScala.foreach { d =>
-      val n = d.getFileName.toString
-      if (n.startsWith("cell=") && !touchedCert(n.stripPrefix("cell=").toLong))
-        linkDirInto(d, tmp.resolve("vecs").resolve(n))
-    } finally ck.close()
-    writeVecManifest(s, tmp, dir, corpusFp, listing)
-    val nChanged = changedIds.count()
-    deltaStats.put(key, (priorCert.count() - removed.count(), nChanged))
-    carryStats.put(key, CarryStat(
-      linkedBuckets = linked,
-      rewrittenBuckets = touchedData.size,
-      bytesLinked = linkedBytes,
-      bytesWritten = dirBytes(tmp.resolve("data")) - linkedBytes,
-      scannedFiles = deltaPaths))
-  }
 
   // ------------------------------------------------------ pair generations
 
@@ -1289,13 +1148,6 @@ object ArtifactStore {
     * lower it to pin the trigger without writing 64 generations. */
   private[graft] var pairCompactFileBound: Int = 64
   private[graft] val pairStats = new ConcurrentHashMap[String, PairBuildStat]()
-
-  /** The current corpus certificate over exactly `paths`, flat
-    * (no bucket column — pair generations are not partition-carried). */
-  private def docCertFlat(s: SparkSession, paths: Seq[String]): DataFrame =
-    s.read.parquet(paths: _*).select(col("doc_id"),
-      documentsRowDigest.as("digest"),
-      graft.sources.CorpusFiles.srcCol.as("src"))
 
   /** [[documentsArtifact]] for PAIR-LOCAL families (near-dup pair
     * lists, winnow match reports, sim-join results): rows name TWO
@@ -1375,74 +1227,44 @@ object ArtifactStore {
     val fp = documentsFp(s, dir)
     val dataDir = publishOnce(s, key, fp) { tmp =>
       val listing = graft.sources.CorpusFiles.list(s, dir, "documents")
-      val hfs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
       val prior = priorGeneration(key, fp)
-      val priorManifest = prior.flatMap { pfp =>
-        graft.sources.CorpusFiles.readManifest(hfs,
-          new org.apache.hadoop.fs.Path(filesManifestPath(key, pfp).toString))
-      }
       def fullBuild(mode: String = "full"): Unit = {
-        val cert = docCertFlat(s, listing.map(_._1)).localCheckpoint()
+        val cert = docCertFrame(s, listing.map(_._1)).localCheckpoint()
         full.withColumn("fp", lit(fp)).write.mode("overwrite")
           .parquet(tmp.resolve("data").toString)
         cert.write.mode("overwrite").parquet(tmp.resolve("docs").toString)
         writeFilesManifest(s, tmp, fp, listing, Map.empty, cert)
         pairStats.put(key, PairBuildStat(mode, -1L, listing.map(_._1)))
       }
-      (prior, priorManifest) match {
+      (prior, prior.flatMap(generationManifest(s, key, _))) match {
         case (Some(pfp), Some(pm)) =>
-          val (unchanged, delta) = listing.partition { case (p, sz, mt) =>
-            pm.get(p).exists { case (s0, m0, _) => s0 == sz && m0 == mt }
-          }
-          val removedOrChanged =
-            (pm.keySet -- unchanged.map(_._1)).toSeq.sorted
-          val deltaPaths = delta.map(_._1)
           val priorCert = s.read.parquet(docsSidecarPath(key, pfp).toString)
             .select(col("doc_id"), col("digest"), col("src"))
-          val carriedCert = priorCert
-            .where(!col("src").isin(removedOrChanged: _*))
-          val deltaCert =
-            (if (deltaPaths.isEmpty) priorCert.limit(0)
-             else docCertFlat(s, deltaPaths)).localCheckpoint()
-          // rows the prior certificate cannot vouch for
-          val unvouched = deltaCert
-            .join(priorCert.select(col("doc_id"), col("digest")),
-              Seq("doc_id", "digest"), "left_anti").localCheckpoint()
+          val d = new CarryDiff("doc_id", listing, pm, priorCert,
+            docCertFrame(s, _))
           // changed = unvouched rows whose id the prior corpus knew
-          val changedIds = unvouched
+          val changedIds = d.unvouched
             .join(priorCert.select(col("doc_id")), Seq("doc_id"), "left_semi")
             .select(col("doc_id")).distinct().localCheckpoint()
           val nChanged = changedIds.count()
-          // removed = prior rows of vanished/changed files that neither
-          // resurfaced in the scan nor survive in an unchanged file
-          val removedIds = priorCert
-            .where(col("src").isin(removedOrChanged: _*))
-            .join(deltaCert.select(col("doc_id"), col("digest")),
-              Seq("doc_id", "digest"), "left_anti")
-            .join(carriedCert.select(col("doc_id"), col("digest")),
-              Seq("doc_id", "digest"), "left_anti")
-            .select(col("doc_id")).distinct().localCheckpoint()
+          val removedIds = d.removed.select(col("doc_id")).distinct()
+            .localCheckpoint()
           val nRemoved = removedIds.count()
           val priorDataDir = Paths.get(dataPath(key, pfp))
           // the purge modes and the full build rewrite everything, so
           // the accretion check gates only the link-carried pure append
           val wantCompact = appendOnly &&
             partFileCount(priorDataDir) >= pairCompactFileBound
-          def writeDeltaManifest(): Unit = {
-            val unchangedSet = unchanged.map(_._1).toSet
-            writeFilesManifest(s, tmp, fp, listing,
-              pm.collect { case (p, (_, _, sum)) if unchangedSet(p) =>
-                p -> sum },
-              deltaCert.select(col("src"), col("digest")))
-          }
+          def writeDeltaManifest(): Unit =
+            writeFilesManifest(s, tmp, fp, listing, d.carriedSums,
+              d.deltaCert.select(col("src"), col("digest")))
           def writeCertAndManifest(): Unit = {
-            carriedCert.unionByName(deltaCert)
+            d.carriedCert.unionByName(d.deltaCert)
               .write.mode("overwrite").parquet(tmp.resolve("docs").toString)
             writeDeltaManifest()
           }
           if (nChanged == 0L && nRemoved == 0L && !wantCompact) {
-            val newIds = unvouched.select(col("doc_id")).distinct()
+            val newIds = d.unvouched.select(col("doc_id")).distinct()
             val priorPairs = s.read.parquet(dataPath(key, pfp)).drop("fp")
             deltaFor(priorPairs, newIds).withColumn("fp", lit(fp))
               .write.mode("overwrite").parquet(tmp.resolve("data").toString)
@@ -1460,16 +1282,16 @@ object ArtifactStore {
             // them (part names carry per-job UUIDs, so they never
             // collide), keeping cert maintenance O(delta) like the
             // manifest; a file-level change writes the full union once
-            val linkCert = removedOrChanged.isEmpty
+            val linkCert = d.removedOrChanged.isEmpty
             if (linkCert) {
-              deltaCert.write.mode("overwrite")
+              d.deltaCert.write.mode("overwrite")
                 .parquet(tmp.resolve("docs").toString)
               linkDirInto(docsSidecarPath(key, pfp),
                 tmp.resolve("docs"), skipMarkers = true, requireFlat = true)
               writeDeltaManifest()
             } else writeCertAndManifest()
             pairStats.put(key,
-              PairBuildStat("delta", newIds.count(), deltaPaths, linkCert,
+              PairBuildStat("delta", newIds.count(), d.deltaPaths, linkCert,
                 dataLinked = appendOnly))
           } else if (appendOnly && (nChanged > 0L || nRemoved > 0L) && {
             // PURGE only when the dead set is a sliver of the prior
@@ -1505,7 +1327,7 @@ object ArtifactStore {
               .join(deadIds.withColumnRenamed("doc_id", bCol),
                 Seq(bCol), "left_anti")
               .select(priorPairs.columns.map(col): _*)
-            val freshIds = unvouched.select(col("doc_id")).distinct()
+            val freshIds = d.unvouched.select(col("doc_id")).distinct()
             val nFresh = freshIds.count()
             val out =
               if (nFresh == 0L) purged
@@ -1516,7 +1338,7 @@ object ArtifactStore {
             writeCertAndManifest()
             pairStats.put(key, PairBuildStat(
               if (nFresh == 0L) "purge" else "purge+delta",
-              nFresh, deltaPaths, deadDocs = nDead))
+              nFresh, d.deltaPaths, deadDocs = nDead))
           } else fullBuild(if (wantCompact) "compact" else "full")
         case _ => fullBuild()
       }
@@ -1533,24 +1355,15 @@ object ArtifactStore {
     * explicit janitor-job API (same posture as compaction q120).
     * Returns the deleted fingerprint dirs. */
   def gcKeepLatest(key: String, keep: Int): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val base = Paths.get(root, key)
-    if (!Files.isDirectory(base)) return Seq.empty
-    val kids = Files.list(base)
-    val fps =
-      try kids.iterator().asScala.toSeq
-        .filter(p => p.getFileName.toString.startsWith("fp-") &&
-          Files.exists(p.resolve("manifest.json")))
-        .sortBy(p =>
-          Files.getLastModifiedTime(p.resolve("manifest.json")).toMillis)
-      finally kids.close()
-    val doomed = fps.dropRight(keep)
+    val doomed = publishedFps(key).dropRight(keep)
+      .map(fp => Paths.get(root, key, s"fp-$fp"))
     doomed.foreach { p =>
       memo.remove(p.toString)
       deleteRecursively(p)
     }
     doomed.map(_.getFileName.toString)
   }
+
 
   /** Drop a published artifact (the takedown-cascade invalidation
     * path): removes the fp dir and the in-process memo entry so the

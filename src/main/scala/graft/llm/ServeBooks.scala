@@ -342,9 +342,6 @@ object ServeBooks {
           txt == want
         }
       }
-      .sortBy(p => java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(ArtifactStore.dataPath(PqResCodesKey, p))
-          .getParent.resolve("manifest.json")).toMillis)
       .lastOption
   }
 
@@ -594,9 +591,6 @@ object ServeBooks {
         fs.exists(sidecarPath(dp)) && fs.exists(vecsSidecarPath(dp)) &&
           bookDigest(generationBook(s, dp)) == want
       }
-      .sortBy(p => java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(ArtifactStore.dataPath(AnnCellsKey, p))
-          .getParent.resolve("manifest.json")).toMillis)
       .lastOption
   }
 

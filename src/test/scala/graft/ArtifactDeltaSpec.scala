@@ -19,6 +19,7 @@ class ArtifactDeltaSpec extends SparkSpec {
 
   private val ShKey = "shingle_hashes3_v1"
   private val SigKey = "minhash_sig3_v1"
+  private val Sh8Key = "shingle_hashes8_v1"
 
   private def writeCorpus(path: String, docs: DataFrame): String = {
     docs.coalesce(1).write.parquet(s"$path/documents.parquet")
@@ -36,6 +37,13 @@ class ArtifactDeltaSpec extends SparkSpec {
       Dedup.shingles(docs, 3)
         .select(col("doc_id"), Dedup.minhashTokenX(col("s")).as("x")))
       .collect().map(_.toSeq).toSet
+
+  private def expectedShingles8(docs: DataFrame) =
+    Dedup.shingles(docs, 8).select(col("doc_id"), xxhash64(col("s")).as("h"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def sh8Rows(df: DataFrame) = df.select(col("doc_id"), col("h"))
+    .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   private def shRows(df: DataFrame) = df
     .select(col("doc_id"), col("x"), col("h"))
@@ -62,6 +70,10 @@ class ArtifactDeltaSpec extends SparkSpec {
     // publish A's sig generation too, so B's sig build has a fresh base
     assert(DedupQueries.minhashSig3(spark, dirA).collect().map(_.toSeq).toSet ==
       expectedSigs(docsA))
+    // and A's 8-gram generation: a doc shorter than 8 words derives no
+    // rows, so the carry must place rebuilt docs by id, not by output
+    assert(sh8Rows(DedupQueries.shingleHashes8(spark, dirA)) ==
+      expectedShingles8(docsA))
 
     // corpus B: A + 100 APPENDED docs (texts not in any prior corpus)
     val appended = base.where(col("doc_id") >= 300 && col("doc_id") < 400)
@@ -81,6 +93,12 @@ class ArtifactDeltaSpec extends SparkSpec {
     assert(ArtifactStore.deltaStats.get(SigKey) == ((300L, 100L)),
       s"append must sign only the 100 new docs: " +
         s"${ArtifactStore.deltaStats.get(SigKey)}")
+    assert(sh8Rows(DedupQueries.shingleHashes8(spark, dirB)) ==
+      expectedShingles8(docsB),
+      "the delta-built 8-gram hashes must equal a from-scratch build")
+    assert(ArtifactStore.deltaStats.get(Sh8Key) == ((300L, 100L)),
+      s"append must 8-gram only the 100 new docs: " +
+        s"${ArtifactStore.deltaStats.get(Sh8Key)}")
 
     // corpus C: B with doc 5 REMOVED and doc 7's source changed in
     // place (text identical — the certificate must still catch it: it
@@ -99,6 +117,12 @@ class ArtifactDeltaSpec extends SparkSpec {
     assert(DedupQueries.shingleHashes3(spark, dirC)
       .where(col("doc_id") === 5).count() == 0L,
       "the removed doc must have no rows in the new generation")
+    assert(sh8Rows(DedupQueries.shingleHashes8(spark, dirC)) ==
+      expectedShingles8(docsC),
+      "removal + in-place change must equal a from-scratch 8-gram build")
+    assert(ArtifactStore.deltaStats.get(Sh8Key) == ((398L, 1L)),
+      s"the 8-gram carry must drop the removed doc and rebuild only the " +
+        s"changed one: ${ArtifactStore.deltaStats.get(Sh8Key)}")
   }
 
   test("verdict flags: delta-built row flags + recomputed canonical " +

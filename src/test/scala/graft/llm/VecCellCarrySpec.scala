@@ -286,6 +286,63 @@ class VecCellCarrySpec extends SparkSpec {
     }
   }
 
+  test("a prior whose vecs certificate is flat (no cell partitions) " +
+    "demotes to the row-level carry, and the migration build equals " +
+    "a from-scratch build in the cell-partitioned layout") {
+    val dir = Files.createTempDirectory("vec_flat").toString
+    val o = off
+    val base = saltedBase(300, o)
+    base.repartition(3).write.parquet(s"$dir/embeddings.parquet")
+    var built: List[String] = Nil
+    try {
+      val pathA = ServeBooks.annCellsPath(spark, dir)
+      built ::= pathA
+      val bookA = ServeBooks.generationBook(spark, pathA)
+      // rewrite A's certificate in the flat pre-cell layout: the same
+      // (vec_id, digest) rows, no cell= directories
+      val vecsA = Paths.get(pathA).getParent.resolve("vecs")
+      val flatTmp = s"${Files.createTempDirectory("vec_flat_cert")}/vecs"
+      spark.read.parquet(vecsA.toString).select(col("vec_id"), col("digest"))
+        .coalesce(1).write.parquet(flatTmp)
+      val sub = Files.walk(vecsA)
+      try sub.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      finally sub.close()
+      Files.move(Paths.get(flatTmp), vecsA)
+      val kids = Files.list(vecsA)
+      try assert(!kids.toArray.map(_.toString).exists(_.contains("cell=")),
+        "witness: the prior's certificate is flat")
+      finally kids.close()
+
+      clonesOf(base, o, o + 9000L, 5).coalesce(1)
+        .write.mode("append").parquet(s"$dir/embeddings.parquet")
+      val pathB = ServeBooks.annCellsPathFor(spark, dir, bookA)
+      built ::= pathB
+      val corpusB = spark.read.parquet(s"$dir/embeddings.parquet")
+      assert(cellRows(spark.read.parquet(pathB)) ==
+        expectedCells(corpusB, bookA),
+        "a flat-certificate prior must still yield exact rows " +
+          "(row-level carry)")
+      assert(ArtifactStore.deltaStats.get(ServeBooks.AnnCellsKey) ==
+        ((300L, 5L)),
+        s"the row-level fallback still carries by (vec_id, digest): " +
+          s"${ArtifactStore.deltaStats.get(ServeBooks.AnnCellsKey)}")
+      assert(ArtifactStore.carryStats.get(ServeBooks.AnnCellsKey) == null,
+        "the cell-carry stats must be absent — the flat prior demoted " +
+          "the build to the row-level path")
+      val vecsB = Files.list(Paths.get(pathB).getParent.resolve("vecs"))
+      try assert(vecsB.toArray.map(_.toString).exists(_.contains("cell=")),
+        "the migration build's certificate is cell-partitioned")
+      finally vecsB.close()
+    } finally {
+      built.foreach { p =>
+        ArtifactStore.invalidate(ServeBooks.AnnCellsKey,
+          Paths.get(p).getParent.getFileName.toString
+            .stripPrefix("fp-").toLong)
+      }
+    }
+  }
+
   test("pq-res codes append under kept books: one file scanned, " +
     "touched cells rewritten, the rest hard-linked — the codes family " +
     "rides the same cell carry (r13 verdict item 3 adjudication)") {

@@ -95,7 +95,7 @@ object ArtifactStore {
   /** Documents fingerprint = q110's `documents` sum_digest, verbatim
     * (same tag, same key columns) — the checksum the verdict named as
     * the manifest key. */
-  private def documentsRowDigest: Column =
+  private[graft] def documentsRowDigest: Column =
     queries.OpsQueries.checksumHash("documents",
       Seq("doc_id", "text", "lang", "source", "n_chars"))
 
@@ -685,9 +685,12 @@ object ArtifactStore {
     /** The unchanged files' recorded digest sums, for the new manifest. */
     def carriedSums: Map[String, Long] =
       priorManifest.collect { case (p, (_, _, sum)) if unchangedSet(p) => p -> sum }
-    /** The prior certificate's rows of unchanged files. */
+    /** The prior certificate's rows of unchanged files, and of the
+      * removed or changed ones. */
     val carriedCert: DataFrame =
       priorCert.where(!col("src").isin(removedOrChanged: _*))
+    val goneCert: DataFrame =
+      priorCert.where(col("src").isin(removedOrChanged: _*))
     val deltaCert: DataFrame =
       (if (deltaPaths.isEmpty)
         priorCert.select(col(idCol), col("digest"), col("src")).limit(0)
@@ -695,8 +698,7 @@ object ArtifactStore {
     val unvouched: DataFrame = deltaCert
       .join(priorCert.select(idDigest: _*), Seq(idCol, "digest"), "left_anti")
       .localCheckpoint()
-    def removed: DataFrame = priorCert
-      .where(col("src").isin(removedOrChanged: _*))
+    def removed: DataFrame = goneCert
       .join(deltaCert.select(idDigest: _*), Seq(idCol, "digest"), "left_anti")
       .join(carriedCert.select(idDigest: _*), Seq(idCol, "digest"), "left_anti")
   }
@@ -948,7 +950,11 @@ object ArtifactStore {
           dc.getOrElse(c, 0L) != cc.getOrElse(c, 0L))
       }
       val touchedData = parts(freshCert) ++ parts(removed) ++ dirty
-      val touchedCert = touchedData ++ parts(vouchedCert)
+      // certificate partitions also change where a removed or changed
+      // file's prior rows sit — even when no data row moves (one copy
+      // of a cross-file duplicate deleted): linking them would keep the
+      // gone file's rows in the certificate
+      val touchedCert = touchedData ++ parts(vouchedCert) ++ parts(d.goneCert)
       // --- data: touched partitions = fresh rows + the certified
       // survivors (never a changed, removed or uncertified row); links
       // for the rest

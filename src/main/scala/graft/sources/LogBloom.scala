@@ -41,19 +41,21 @@ object LogBloom {
   private def bloomsDir(log: String) =
     new org.apache.hadoop.fs.Path(s"$log/_blooms")
 
-  /** Publish the batch's doc-id bloom (write-if-absent). `ids` is a
-    * one-column BIGINT frame of the batch's doc ids — bounded by the
-    * micro-batch; the bloom aggregates distributed and only the KB-ish
-    * bitset comes to the driver. */
+  /** Publish the batch's doc-id bloom (write-if-absent; no-op for an
+    * empty frame). `ids` is a one-column BIGINT frame of the batch's
+    * doc ids — bounded by the micro-batch; the bloom aggregates
+    * distributed and only the KB-ish bitset comes to the driver. */
   def record(s: SparkSession, log: String, batchId: Long,
              ids: DataFrame): Unit = {
     val dir = bloomsDir(log)
     val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(dir, batchId.toString)
     if (fs.exists(p)) return
-    val keyCol = ids.columns.head
-    val n = math.max(ids.count(), 64L)
-    val bloom = ids.stat.bloomFilter(keyCol, n, Fpp)
+    // nothing to certify, and Spark's bloom aggregate over zero rows
+    // fails; a batch without a bloom stays a candidate (safe fallback)
+    val n = ids.count()
+    if (n == 0L) return
+    val bloom = ids.stat.bloomFilter(ids.columns.head, math.max(n, 64L), Fpp)
     val tmp = new org.apache.hadoop.fs.Path(dir,
       s".${batchId}-tmp-${java.util.UUID.randomUUID.toString.take(8)}")
     val out = fs.create(tmp, true)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.ArtifactStore
-import graft.streaming.StreamMergeSink
+import graft.streaming.{BatchHighWater, BucketStore, StreamMergeSink}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -66,29 +66,21 @@ object TakedownApply {
   }
 
   /** Leg 2: drop flagged docs from the compacted index target,
-    * rewriting only the buckets that held them. With the target's
-    * `_buckets` meta ([[graft.streaming.BucketMeta]]) the predicate
-    * gains a bucket IN-list conjunct that partition-prunes the
-    * discovery scan to the flagged ids' buckets; absent/torn meta
-    * falls back to the unpruned predicate. */
+    * rewriting only the buckets that held them; the discovery scan
+    * prunes to the flagged ids' buckets when the target's `_buckets`
+    * note names them ([[BucketStore.doomed]]). Under the index's
+    * mutation lease, serialized against
+    * [[graft.streaming.StreamIndexCompact.compactBatch]] in-JVM and
+    * cross-process so the scrub cannot interleave a batch's gate read
+    * and its compacted-bucket merge (r12 ADVICE); the registry entry is
+    * [[scrubIndexLog]]'s. */
   def scrubIndex(s: SparkSession, target: String, flagged: Seq[Long]): Unit =
-    // the index target's mutation lease (MutationLease): serialized
-    // against StreamIndexCompact.compactBatch in-JVM and cross-process,
-    // so the scrub cannot interleave a batch's gate read and its
-    // compacted-bucket merge (r12 ADVICE). Scrub side waits out a live
-    // holder for a bounded window (ScrubRetry — the leg is idempotent)
-    ScrubRetry.retryContended(s"scrubIndex($target)") {
-     MutationLease.withLease(s, target) {
-      val doomed = col("doc_id").isin(flagged: _*)
-      val pred = graft.streaming.BucketMeta.read(s, target) match {
-        case Some(b) => col("bucket").isin(
-          flagged.map(java.lang.Math.floorMod(_, b)).distinct: _*) && doomed
-        case None => doomed
-      }
+    BucketStore.scrubbing(s, target, "scrubIndex", flagged, register = false) {
+      val doomed = BucketStore.doomed(s, target, "doc_id", flagged)
       Seq("postings", "doclens").foreach { sub =>
-        PartitionScrub.dropRows(s, s"$target/$sub", "bucket", pred)
+        PartitionScrub.dropRows(s, s"$target/$sub", "bucket", doomed)
       }
-    }}
+    }
 
   /** Leg 4 (erasure beats time travel): the merge sink's change LOG
     * keeps every historical row, so [[TimeTravel.asOf]] would
@@ -105,34 +97,31 @@ object TakedownApply {
     * readable bloom stay candidates — legacy logs scrub exactly as
     * before. */
   def scrubMergeLog(s: SparkSession, log: String, flagged: Seq[Long]): Unit =
-   // under the LOG's mutation lease: a replayed batch's gate read +
-   // log write (StreamMergeSink) cannot interleave this registry
-   // append + partition rewrite (r12 ADVICE's lost-update class);
-   // scrub side waits out a live holder bounded (ScrubRetry)
-   ScrubRetry.retryContended(s"scrubMergeLog($log)") {
-   MutationLease.withLease(s, log) {
-    // registry FIRST (crash-safe ordering): once the erasure window is
-    // recorded, a checkpoint replay of any pre-scrub batch re-applies
-    // the tombstone form at write time (ScrubRegistry — without it the
-    // replay's dynamic partition overwrite would resurrect the erased
-    // content with nothing left to re-scrub), and a rerun after a
-    // crash completes the partition rewrites
-    ScrubRegistry.append(s, log, flagged, ScrubRegistry.maxBatchId(s, log))
-    val cands = LogBloom.candidateBatches(s, log, flagged)
-    // touch = a flagged doc's row not yet in tombstone form (so a
-    // second pass rewrites nothing — idempotent)
-    if (cands.nonEmpty)
-      PartitionScrub.rewriteTouched(s, log, "batch_id",
-        col("batch_id").isin(cands: _*) && col("docId").isin(flagged: _*) &&
-          (col("op") =!= "D" || col("text") =!= "")) { rows =>
-        rows.select(col("docId"), col("ver"),
-          when(col("docId").isin(flagged: _*), lit("D"))
-            .otherwise(col("op")).as("op"),
-          when(col("docId").isin(flagged: _*), lit(""))
-            .otherwise(col("text")).as("text"),
-          col("batch_id"))
-      }
-  }}
+    // under the LOG's mutation lease: a replayed batch's gate read + log
+    // write (StreamMergeSink) cannot interleave this registry append +
+    // partition rewrite (r12 ADVICE's lost-update class). Registry FIRST
+    // at the log's newest batch: a checkpoint replay of any pre-scrub
+    // batch re-applies the tombstone form at write time — without it
+    // the replay's dynamic partition overwrite would resurrect the
+    // erased content with nothing left to re-scrub — and a rerun after
+    // a crash completes the partition rewrites
+    BucketStore.scrubbing(s, log, "scrubMergeLog", flagged,
+        upto = ScrubRegistry.maxBatchId) {
+      val cands = LogBloom.candidateBatches(s, log, flagged)
+      // touch = a flagged doc's row not yet in tombstone form (so a
+      // second pass rewrites nothing — idempotent)
+      if (cands.nonEmpty)
+        PartitionScrub.rewriteTouched(s, log, "batch_id",
+          col("batch_id").isin(cands: _*) && col("docId").isin(flagged: _*) &&
+            (col("op") =!= "D" || col("text") =!= "")) { rows =>
+          rows.select(col("docId"), col("ver"),
+            when(col("docId").isin(flagged: _*), lit("D"))
+              .otherwise(col("op")).as("op"),
+            when(col("docId").isin(flagged: _*), lit(""))
+              .otherwise(col("text")).as("text"),
+            col("batch_id"))
+        }
+    }
 
   /** Leg 5: same retroactive erasure for the search index's
     * time-travel log ([[graft.streaming.StreamIndexCompact]]'s
@@ -141,26 +130,28 @@ object TakedownApply {
     * partition: retroactively the doc was never indexed. Discovery is
     * [[LogBloom]]-pruned like [[scrubMergeLog]]. */
   def scrubIndexLog(s: SparkSession, target: String, flagged: Seq[Long]): Unit =
-   // same lease as scrubIndex/compactBatch (one writer per index
-   // target); same bounded scrub-side wait (ScrubRetry)
-   ScrubRetry.retryContended(s"scrubIndexLog($target)") {
-   MutationLease.withLease(s, target) {
-    // registry FIRST (scrubMergeLog's rationale): gates checkpoint
-    // replays of pre-scrub batches in StreamIndexCompact.compactBatch —
-    // the compacted-bucket merge AND the log partition rewrite would
-    // both re-insert the victims' rows otherwise. One registry at the
-    // target root covers both sub-logs and the compacted merge.
-    val upto = Seq("log/postings", "log/doclens")
-      .map(sub => ScrubRegistry.maxBatchId(s, s"$target/$sub")).max
-    ScrubRegistry.append(s, target, flagged, upto)
-    Seq("log/postings", "log/doclens").foreach { sub =>
-      val log = s"$target/$sub"
-      val cands = LogBloom.candidateBatches(s, log, flagged)
-      if (cands.nonEmpty)
-        PartitionScrub.dropRows(s, log, "batch_id",
-          col("batch_id").isin(cands: _*) && col("doc_id").isin(flagged: _*))
+    // same lease as scrubIndex/compactBatch (one writer per index
+    // target). Registry FIRST (scrubMergeLog's rationale): gates
+    // checkpoint replays of pre-scrub batches in
+    // StreamIndexCompact.compactBatch — the compacted-bucket merge AND
+    // the log partition rewrite would both re-insert the victims' rows
+    // otherwise. One registry at the target root covers both sub-logs
+    // and the compacted merge; its window is the higher of the
+    // high-water note and the logs' newest batch (a target written
+    // before the note has only the logs).
+    BucketStore.scrubbing(s, target, "scrubIndexLog", flagged,
+        upto = (s, t) => (BatchHighWater.read(s, t) +:
+          IndexLogs.map(sub => ScrubRegistry.maxBatchId(s, s"$t/$sub"))).max) {
+      IndexLogs.foreach { sub =>
+        val log = s"$target/$sub"
+        val cands = LogBloom.candidateBatches(s, log, flagged)
+        if (cands.nonEmpty)
+          PartitionScrub.dropRows(s, log, "batch_id",
+            col("batch_id").isin(cands: _*) && col("doc_id").isin(flagged: _*))
+      }
     }
-  }}
+
+  private val IndexLogs = Seq("log/postings", "log/doclens")
 
   /** Leg 3: invalidate every documents-derived artifact family for the
     * corpus at `dir` (they encode pre-takedown content). */

@@ -71,13 +71,7 @@ private[graft] object BatchHighWater {
   def uptoForScrub(s: SparkSession, target: String): Long = {
     val v = read(s, target)
     if (v >= 0L) return v
-    val fs = fsOf(s, target)
-    val dir = new org.apache.hadoop.fs.Path(target)
-    val hasData = fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (hasData)
+    if (BucketStore.hasData(s, target))
       throw new IllegalStateException(
         s"store $target holds data but no $Prefix note parses — its " +
           "erasure window cannot be bounded and a checkpoint replay " +

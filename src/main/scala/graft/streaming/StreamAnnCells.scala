@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.llm.{ServeBooks, VectorOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.LongType
 
 /** Streaming ingest maintainer for the serve-cells artifact — the
   * vector-side twin of [[StreamVerdictFlags]] (and the raw-vector
@@ -77,21 +76,8 @@ object StreamAnnCells {
       (if (legacy) assigned0.withColumn("corpus_fp", lit(corpusFp))
         .withColumn("fp", lit(fp))
        else assigned0).localCheckpoint()
-    val touched = assigned.select(col("cell")).distinct()
-      .collect().map(_.getLong(0))
     ServeBooks.withCellsLock(s, dataPath) {
-      val existing0 = s.read.parquet(dataPath)
-        .where(col("cell").isin(touched: _*))
-        .withColumn("cell", col("cell").cast(LongType))
-      val existing = existing0.select(assigned.columns.map(col): _*)
-      existing.localCheckpoint()
-        .unionByName(assigned)
-        .distinct()
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .mode("overwrite")
-        .parquet(dataPath)
+      BucketStore.merge(dataPath, "cell", assigned)(_.distinct())
     }
   }
 
@@ -107,9 +93,7 @@ object StreamAnnCells {
     val fp = ServeBooks.annCellsFp(s, dir)
     val corpusFp = graft.ArtifactStore.embeddingsFp(s, dir)
     val dataPath = ServeBooks.annCellsPath(s, dir)
-    vectors.writeStream
-      .foreachBatch(compactBatch(dataPath, book, fp, corpusFp, dir) _)
-      .option("checkpointLocation", checkpoint)
-      .start()
+    BucketStore.start(vectors, checkpoint, None)(
+      compactBatch(dataPath, book, fp, corpusFp, dir) _)
   }
 }

@@ -35,99 +35,53 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamAnnIndex {
 
-  /** Encode + merge one batch of (vec_id, embedding) vectors. Runs
-    * under the target's mutation lease ([[graft.sources
-    * .MutationLease]]) and behind the [[graft.sources.ScrubRegistry]]
-    * replay gate — a checkpoint replay of a batch the takedown scrub
-    * already covered would re-encode the victims and the per-key max()
-    * merge would re-insert their codes with nothing left to re-scrub
-    * (r13 self-review finding 4); new batches pass through, so a
-    * post-takedown re-add of a vec id indexes normally. */
+  /** Encode + merge one batch of (vec_id, embedding) vectors through
+    * [[BucketStore.ingest]] — under the target's mutation lease and
+    * behind the replay gate: a checkpoint replay of a batch the
+    * takedown scrub already covered would re-encode the victims and the
+    * per-key max() merge would re-insert their codes with nothing left
+    * to re-scrub (r13 self-review finding 4); new batches pass through,
+    * so a post-takedown re-add of a vec id indexes normally. */
   def compactBatch(target: String, coarse: Array[Array[Double]],
                    resBooks: Array[Array[Array[Double]]], buckets: Int)
-                  (batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (batch.isEmpty) return
-    graft.sources.MutationLease.withLease(s, target) {
-      compactLocked(s, target, coarse, resBooks, buckets, batch, batchId)
+                  (batch: DataFrame, batchId: Long): Unit =
+    BucketStore.ingest(target, buckets, "vec_id", batch, batchId) { live =>
+      val bookArr = array(coarse.map(c =>
+        array(c.toSeq.map(lit(_)): _*)).toSeq: _*)
+      val assigned = live
+        .select(col("vec_id"), VectorOps.toDoubleArr(col("embedding")).as("v"))
+        .select(col("vec_id"), col("v"),
+          ServeBooks.cell(coarse, col("v")).as("cell"))
+        .withColumn("cent", element_at(bookArr, (col("cell") + 1).cast("int")))
+        .select(col("vec_id"), col("cell"),
+          zip_with(col("v"), col("cent"), (a, b) => a - b).as("rv"))
+        .withColumn("bucket", pmod(col("vec_id"), lit(buckets.toLong)))
+        .localCheckpoint()
+      // the target co-locates the `_` notes with the bucket partitions:
+      // BucketStore's has-data rule reads a notes-only dir as empty
+      BucketStore.merge(target, "bucket", assigned.select(col("vec_id"),
+        col("bucket"), col("cell"), Pq.encodeWith(resBooks)(col("rv")).as("codes")))(
+        _.groupBy(col("bucket"), col("vec_id"))
+          .agg(max(struct(col("cell"), col("codes"))).as("m"))
+          .select(col("vec_id"), col("bucket"),
+            col("m.cell").as("cell"), col("m.codes").as("codes")))
     }
-  }
-
-  private def compactLocked(s: org.apache.spark.sql.SparkSession,
-                            target: String, coarse: Array[Array[Double]],
-                            resBooks: Array[Array[Array[Double]]],
-                            buckets: Int, batch0: DataFrame,
-                            batchId: Long): Unit = {
-    // high-water note FIRST (BatchHighWater's crash ordering), then
-    // the replay gate
-    BatchHighWater.record(s, target, batchId)
-    val gated = graft.sources.ScrubRegistry.gatedIds(s, target, batchId)
-    val batch =
-      if (gated.isEmpty) batch0
-      else batch0.where(!col("vec_id").isin(gated: _*))
-    if (batch.isEmpty) return
-    // validate-or-publish the target's bucket count ([[BucketMeta]]):
-    // the takedown scrub names vec_id partitions from it
-    BucketMeta.ensure(s, target, buckets)
-    val bookArr = array(coarse.map(c =>
-      array(c.toSeq.map(lit(_)): _*)).toSeq: _*)
-    val assigned = batch
-      .select(col("vec_id"), VectorOps.toDoubleArr(col("embedding")).as("v"))
-      .select(col("vec_id"), col("v"),
-        ServeBooks.cell(coarse, col("v")).as("cell"))
-      .withColumn("cent", element_at(bookArr, (col("cell") + 1).cast("int")))
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("v"), col("cent"), (a, b) => a - b).as("rv"))
-      .withColumn("bucket", pmod(col("vec_id"), lit(buckets.toLong)))
-      .localCheckpoint()
-    val incoming = assigned.select(col("vec_id"), col("bucket"), col("cell"),
-      Pq.encodeWith(resBooks)(col("rv")).as("codes"))
-    val touched = assigned.select(col("bucket")).distinct()
-      .collect().map(_.getLong(0))
-    val tgtPath = new org.apache.hadoop.fs.Path(target)
-    val fs = tgtPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // data check, not bare existence (StreamMergeSink's r7 discipline,
-    // sharpened): this target co-locates the _buckets meta with the
-    // data, so the dir exists before the first parquet lands — reading
-    // it then would die on schema inference
-    val existing =
-      if (!hasData(fs, tgtPath)) incoming.limit(0)
-      else s.read.parquet(target).where(col("bucket").isin(touched: _*))
-        .select(incoming.columns.map(col): _*)
-    existing.localCheckpoint()
-      .unionByName(incoming)
-      .groupBy(col("bucket"), col("vec_id"))
-      .agg(max(struct(col("cell"), col("codes"))).as("m"))
-      .select(col("vec_id"), col("bucket"),
-        col("m.cell").as("cell"), col("m.codes").as("codes"))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .mode("overwrite")
-      .parquet(target)
-  }
 
   /** vectors(vec_id, embedding) stream → continuously maintained code
-    * index at `target`, checkpointed. */
+    * index at `target`, checkpointed and pinned to one checkpoint
+    * lineage ([[BucketStore.start]]). */
   def start(vectors: DataFrame, target: String, checkpoint: String,
             coarse: Array[Array[Double]],
             resBooks: Array[Array[Array[Double]]],
-            buckets: Int = 16): StreamingQuery = {
-    // scrub-gated target → one checkpoint lineage per target
-    // ([[LineageEpoch]]): a fresh checkpoint's batch ids would land
-    // inside old erasure windows
-    LineageEpoch.ensure(vectors.sparkSession, target, checkpoint)
-    vectors.writeStream
-      .foreachBatch(compactBatch(target, coarse, resBooks, buckets) _)
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+            buckets: Int = 16): StreamingQuery =
+    BucketStore.start(vectors, checkpoint, Some(target))(
+      compactBatch(target, coarse, resBooks, buckets) _)
 
   /** The maintained index in the exact frame knnIvfPqResOver consumes. */
   def codes(s: org.apache.spark.sql.SparkSession, target: String): DataFrame =
     s.read.parquet(target).select(col("vec_id"), col("cell"), col("codes"))
 
-  /** Vector takedown over the LIVE index (TakedownApply's leg-2 idiom
+  /** Vector takedown over the LIVE index (TakedownApply's leg-2 shape
     * for the ANN target): drop flagged vec_ids, rewriting only the
     * buckets that held them — including dropping a bucket whose every
     * vector was flagged, which dynamic overwrite alone would leave
@@ -136,39 +90,16 @@ object StreamAnnIndex {
     * ANN deployments); the ARTIFACT families need no action here —
     * they are fingerprint-keyed to the source corpus, so regenerating
     * the corpus without the flagged vectors retrains and re-encodes
-    * transparently (ArtifactStore's staleness contract). Idempotent:
-    * a second pass finds no flagged rows and rewrites nothing. */
-  /** True when `p` holds at least one bucket partition — the target
-    * may exist holding only the `_buckets` meta before any data. */
-  private def hasData(fs: org.apache.hadoop.fs.FileSystem,
-                      p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("bucket="))
-
+    * transparently (ArtifactStore's staleness contract). Registry
+    * first and bounded lease retry ([[BucketStore.scrubbing]]); the
+    * discovery scan prunes to the flagged ids' buckets
+    * ([[BucketStore.doomed]]). Idempotent: a second pass finds no
+    * flagged rows and rewrites nothing. */
   def scrub(s: org.apache.spark.sql.SparkSession, target: String,
             flagged: Seq[Long]): Unit =
-   // mutation lease + registry FIRST (TakedownApply's crash-safe
-   // ordering): the recorded window drops victims from replayed
-   // pre-scrub batches at merge entry; the lease excludes an in-flight
-   // merge in another JVM from interleaving this read-rewrite; scrub
-   // side waits out a live holder bounded (ScrubRetry, idempotent)
-   graft.sources.ScrubRetry.retryContended(s"annIndex.scrub($target)") {
-   graft.sources.MutationLease.withLease(s, target) {
-    graft.sources.ScrubRegistry.append(s, target, flagged,
-      BatchHighWater.uptoForScrub(s, target))
-    val tgtPath = new org.apache.hadoop.fs.Path(target)
-    val fs = tgtPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!hasData(fs, tgtPath)) return
-    val doomed = col("vec_id").isin(flagged: _*)
-    // the target's _buckets meta names the vec_id partitions, so the
-    // conjunct partition-prunes the discovery scan to them (identical
-    // rewritten rows — inside a named partition it reduces to
-    // `doomed`); absent/torn meta falls back to the unpruned predicate
-    val pred = BucketMeta.read(s, target) match {
-      case Some(b) => col("bucket").isin(
-        flagged.map(java.lang.Math.floorMod(_, b)).distinct: _*) && doomed
-      case None => doomed
+    BucketStore.scrubbing(s, target, "annIndex.scrub", flagged) {
+      if (BucketStore.hasData(s, target))
+        graft.sources.PartitionScrub.dropRows(s, target, "bucket",
+          BucketStore.doomed(s, target, "vec_id", flagged))
     }
-    graft.sources.PartitionScrub.dropRows(s, target, "bucket", pred)
-   }}
 }

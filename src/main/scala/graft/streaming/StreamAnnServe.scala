@@ -137,7 +137,7 @@ object StreamAnnServe {
     // a loop that has not yet committed a non-empty batch has no
     // parquet under `out` — the monitor must report zero recall for
     // the startup window, not throw schema-inference errors (the
-    // StreamWinnow readOrEmpty posture)
+    // BucketStore.readOrEmpty posture)
     val p = new org.apache.hadoop.fs.Path(out)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val served =

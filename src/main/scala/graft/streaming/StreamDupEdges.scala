@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.llm.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * queries that act on edges (q73's clustering, q141's ROI, q142's
   * audit, q145's canonical pick) need the batch definition exactly:
   * banded candidates VERIFIED by true shingle Jaccard ≥ 0.5. This
-  * foreachBatch compactor (StreamIndexCompact's idiom) maintains that
+  * foreachBatch compactor (a [[BucketStore]] family) maintains that
   * edge set on disk from a document stream, bit-compatible with the
   * batch artifact by construction — it applies the SAME
   * [[Dedup]] hash-family plan fragments to each micro-batch.
@@ -51,84 +51,33 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamDupEdges {
 
-  /** Merge one batch of (doc_id, text) docs into the edge target.
-    * Runs under the target's mutation lease ([[graft.sources
-    * .MutationLease]] — a takedown scrub in another JVM cannot
-    * interleave this read-merge-write) and behind the
-    * [[graft.sources.ScrubRegistry]] replay gate: a checkpoint replay
+  /** Merge one batch of (doc_id, text) docs into the edge target
+    * through [[BucketStore.ingest]] — under the target's mutation lease
+    * (a takedown scrub in another JVM cannot interleave this
+    * read-merge-write) and behind the replay gate: a checkpoint replay
     * of a batch the scrub already covered re-derives the victims' rows
     * and the distinct merge would re-insert them with nothing left to
-    * re-scrub (r13 self-review finding 4); gated batches drop the
-    * victims at entry, genuinely NEW batches (ids above the scrub's
-    * recorded high-water) pass through — erasure stays retroactive,
-    * never prospective. */
+    * re-scrub (r13 self-review finding 4). */
   def compactBatch(target: String, buckets: Int)
-                  (batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (batch.isEmpty) return
-    graft.sources.MutationLease.withLease(s, target) {
-      compactLocked(s, target, buckets, batch, batchId)
-    }
-  }
-
-  private def compactLocked(s: org.apache.spark.sql.SparkSession,
-                            target: String, buckets: Int,
-                            batch0: DataFrame, batchId: Long): Unit = {
-    val b = lit(buckets.toLong)
-    // high-water note FIRST (BatchHighWater's crash ordering), then
-    // the replay gate
-    BatchHighWater.record(s, target, batchId)
-    val gated = graft.sources.ScrubRegistry.gatedIds(s, target, batchId)
-    val batch =
-      if (gated.isEmpty) batch0
-      else batch0.where(!col("doc_id").isin(gated: _*))
-    if (batch.isEmpty) return
-    // a batch of only sub-3-token docs contributes no shingles, no
-    // bands, no candidates — and must not trip the first-batch store
-    // reads below
-    if (Dedup.shingles(batch.select(col("doc_id"), col("text")), 3).isEmpty)
-      return
-
-    // 1. hash each distinct shingle once (q27's discipline)
-    val dt = Dedup.shingles(
-        batch.select(col("doc_id"), col("text")), 3)
-      .select(col("doc_id"), Dedup.minhashTokenX(col("s")).as("x"),
-        xxhash64(col("s")).as("h"))
-      .localCheckpoint()
-
-    def mergeDistinct(sub: String, incoming: DataFrame): Unit = {
-      val path = s"$target/$sub"
-      val touched = incoming.select(col("bucket")).distinct()
-        .collect().map(_.getLong(0))
-      // the common no-near-dup batch verifies ZERO edges: writing the
-      // empty frame would seed the target as a parquet-less
-      // _SUCCESS-only dir that poisons every later schema-inferring
-      // read (and checkpoint replay would re-crash on it) — an empty
-      // merge is a no-op whether or not the target exists yet
-      if (touched.isEmpty) return
-      val tgtPath = new org.apache.hadoop.fs.Path(path)
-      val fs = tgtPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val existing =
-        if (!fs.exists(tgtPath)) incoming.limit(0)
-        else s.read.parquet(path).where(col("bucket").isin(touched: _*))
-          .select(incoming.columns.map(col): _*)
-      existing.localCheckpoint()
-        .unionByName(incoming)
-        .distinct()
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path)
+                  (batch: DataFrame, batchId: Long): Unit =
+    BucketStore.ingest(target, buckets, "doc_id", batch, batchId) { live =>
+      // 1. hash each distinct shingle once (q27's discipline)
+      val dt = Dedup.shingles(live.select(col("doc_id"), col("text")), 3)
+        .select(col("doc_id"), Dedup.minhashTokenX(col("s")).as("x"),
+          xxhash64(col("s")).as("h"))
+        .localCheckpoint()
+      // a batch of only sub-3-token docs contributes no shingles, no
+      // bands, no candidates — and must not trip the first-batch store
+      // reads below
+      if (!dt.isEmpty) compactShingles(target, lit(buckets.toLong), dt)
     }
 
-    // the bucket count is a property of the TARGET (fixed at stream
-    // start, every store keys its partitioning on it) — persist it
-    // once ([[BucketMeta]]: validate-or-publish, loud on a mismatched
-    // restart, torn writes never authoritative) so maintenance passes
-    // can NAME the doc_id-bucketed partitions driver-side (scrub's
-    // shingles/sigs legs) instead of scanning the store
-    BucketMeta.ensure(s, target, buckets)
+  private def compactShingles(target: String, b: Column, dt: DataFrame): Unit = {
+    val s = dt.sparkSession
+    // every merge is idempotent-distinct; an empty one (the common
+    // no-near-dup batch verifies ZERO edges) is a no-op
+    def mergeDistinct(sub: String, incoming: DataFrame): Unit =
+      BucketStore.merge(s"$target/$sub", "bucket", incoming)(_.distinct())
 
     // 2. doc → shingle-hash store (doc_id-bucketed)
     mergeDistinct("shingles", dt
@@ -201,35 +150,19 @@ object StreamDupEdges {
   }
 
   /** (doc_id, text) document stream → continuously maintained edge
-    * target, checkpointed (restart-safe, replay-idempotent). */
+    * target, checkpointed (restart-safe, replay-idempotent) and pinned
+    * to one checkpoint lineage ([[BucketStore.start]]). */
   def start(docs: DataFrame, target: String, checkpoint: String,
-            buckets: Int = 16): StreamingQuery = {
-    // scrub-gated target → one checkpoint lineage per target
-    // ([[LineageEpoch]]): a fresh checkpoint's batch ids would land
-    // inside old erasure windows
-    LineageEpoch.ensure(docs.sparkSession, target, checkpoint)
-    docs.writeStream
-      .foreachBatch(compactBatch(target, buckets) _)
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+            buckets: Int = 16): StreamingQuery =
+    BucketStore.start(docs, checkpoint, Some(target))(compactBatch(target, buckets) _)
 
   /** The edge set as q73/q141/q142/q145's consumers read it — the
     * same (doc_a, doc_b) shape as the `minhash_pairs_v1` artifact.
     * A stream whose every batch verified zero edges has no edges dir
-    * (empty merges are skipped, see mergeDistinct) — consumers read
-    * that as the empty edge set, not an AnalysisException. */
-  def edges(s: SparkSession, target: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$target/edges")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      import org.apache.spark.sql.types._
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_a", LongType),
-          StructField("doc_b", LongType))))
-    } else
-      s.read.parquet(s"$target/edges").select(col("doc_a"), col("doc_b"))
-  }
+    * (empty merges are skipped) — consumers read that as the empty edge
+    * set, not an AnalysisException. */
+  def edges(s: SparkSession, target: String): DataFrame =
+    BucketStore.readOrEmpty(s, s"$target/edges", Seq("doc_a", "doc_b"))
 
   /** The per-doc MinHash signatures as the batch `minhash_sig3_v1`
     * artifact serves them — (doc_id, h0..h15), the corpus-linear state
@@ -276,77 +209,30 @@ object StreamDupEdges {
     * the batch sweep row-for-row (the spec asserts it). A live
     * curation dashboard re-dials its merge threshold over everything
     * ingested so far without recomputing a single signature. */
-  def sweepFromStore(s: SparkSession, target: String): DataFrame = {
+  def sweepFromStore(s: SparkSession, target: String): DataFrame =
     // a stream that never surfaced a candidate has no cand dir (empty
     // merges are skipped) — that is the empty pair set, and the sweep
     // must answer its 6 zero rows exactly like batch q180 would
-    val p = new org.apache.hadoop.fs.Path(s"$target/cand")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val pairs =
-      if (!fs.exists(p)) {
-        import org.apache.spark.sql.types._
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq("da", "db", "c", "na", "nb")
-            .map(StructField(_, LongType))))
-      } else
-        s.read.parquet(s"$target/cand")
-          .select(col("da"), col("db"), col("c"), col("na"), col("nb"))
-    graft.queries.DedupQueries.sweepOver(s, pairs)
-  }
+    graft.queries.DedupQueries.sweepOver(s, BucketStore.readOrEmpty(s,
+      s"$target/cand", Seq("da", "db", "c", "na", "nb")))
 
-  /** Retention janitor for the five stores (r9 verdict item 5): a
-    * long-lived ingest stream accretes two kinds of waste the per-batch
-    * merges never reclaim —
-    *
-    *  1. **Upstream-removed docs.** A doc deleted from the source after
-    *     ingestion keeps its shingle hashes, band keys, and edges in
-    *     the stores forever; no later batch rewrites them away. The
-    *     janitor diffs the store's doc set against the caller's `live`
-    *     doc list and routes the difference through the [[scrub]] leg —
-    *     the driver sees only the REMOVED ids (bounded by deletion
-    *     volume, never corpus size).
-    *  2. **Small files.** Every merge rewrites a touched bucket from
-    *     whatever partitioning `distinct()` left, so a bucket can hold
-    *     up to a shuffle's worth of files per rewrite; buckets touched
-    *     often fragment. Partitions above `maxFilesPerBucket` are
-    *     rewritten one-file-per-bucket through the shared
-    *     [[graft.sources.PartitionScrub.rewriteTouched]] (TimeTravel's
-    *     rewrite-first, delete-after discipline).
-    *
-    * Both passes preserve the served relation exactly: eviction drops
-    * only rows of docs the upstream already removed, and compaction
-    * rewrites identical rows. Idempotent — a second pass touches
-    * nothing (the spec snapshots byte counts to prove it). */
+  /** Retention janitor for the five stores (r9 verdict item 5,
+    * [[BucketStore.janitor]]): a long-lived ingest stream accretes
+    * upstream-removed docs — their shingle hashes, band keys and edges
+    * stay in the stores forever, no later batch rewrites them away —
+    * and buckets fragmented by merge rewrites (a touched bucket is
+    * rewritten from whatever partitioning `distinct()` left). The
+    * shingle store's doc set against the caller's `live` list routes
+    * the removed ids through the [[scrub]] leg without the registry;
+    * fragmented buckets of all five stores are rewritten one file per
+    * bucket. Both passes preserve the served relation exactly;
+    * idempotent (the spec snapshots byte counts to prove it). */
   def janitor(s: SparkSession, target: String, live: DataFrame,
-              maxFilesPerBucket: Int = 4): Unit = {
-    val shPath = new org.apache.hadoop.fs.Path(s"$target/shingles")
-    val fs = shPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(shPath)) return
-    import s.implicits._
-    val removed = s.read.parquet(s"$target/shingles")
-      .select(col("doc_id")).distinct()
-      .join(live.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .as[Long].collect().toSeq
-    // eviction, not erasure: skip the replay registry — a replayed old
-    // batch re-adding an evicted doc is re-evicted by the next janitor
-    // pass (eventual), whereas registering millions of evicted ids
-    // would make every batch's gate read pay for the janitor's history
-    if (removed.nonEmpty) scrubImpl(s, target, removed, register = false)
-    Seq("shingles", "sigs", "bands", "cand", "edges").foreach { sub =>
-      val path = s"$target/$sub"
-      val root = new org.apache.hadoop.fs.Path(path)
-      if (fs.exists(root)) {
-        val frag = fs.listStatus(root).toSeq
-          .filter(_.getPath.getName.startsWith("bucket="))
-          .filter(d => fs.listStatus(d.getPath)
-            .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket)
-          .map(_.getPath.getName.stripPrefix("bucket=").toLong)
-        if (frag.nonEmpty)
-          graft.sources.PartitionScrub.rewriteTouched(s, path, "bucket",
-            col("bucket").isin(frag: _*))(_.repartition(col("bucket")))
-      }
-    }
-  }
+              maxFilesPerBucket: Int = 4): Unit =
+    BucketStore.janitor(s, target, Seq("shingles"), Stores, live,
+      maxFilesPerBucket)(scrubImpl(s, target, _, register = false))
+
+  private val Stores = Seq("shingles", "sigs", "bands", "cand", "edges")
 
   /** Takedown leg for the edge target: every store holds
     * content-derived rows of the flagged docs — shingle hashes,
@@ -373,43 +259,16 @@ object StreamDupEdges {
 
   private def scrubImpl(s: SparkSession, target: String, flagged: Seq[Long],
                         register: Boolean): Unit =
-   // under the target's mutation lease (no interleave with an in-flight
-   // merge in another JVM; in-JVM the monitor serializes); scrub side
-   // waits out a live holder bounded (ScrubRetry, idempotent)
-   graft.sources.ScrubRetry.retryContended(s"dupEdges.scrub($target)") {
-   graft.sources.MutationLease.withLease(s, target) {
-    // registry FIRST (TakedownApply's crash-safe ordering): once the
-    // erasure window — bounded by the store's batch high-water note —
-    // is recorded, a checkpoint replay of any pre-scrub batch drops the
-    // victims at merge entry instead of re-deriving their rows into the
-    // distinct merge (r13 self-review finding 4); batches above the
-    // window pass through, so a post-takedown re-add indexes normally.
-    if (register)
-      graft.sources.ScrubRegistry.append(s, target, flagged,
-        BatchHighWater.uptoForScrub(s, target))
-    val doomed = col("doc_id").isin(flagged: _*)
-    // with the meta file, the doomed predicate gains a bucket IN-list
-    // conjunct: it is a partition-filter, so dropRows' discovery scan
-    // reads ONLY the named directories (inside a named partition the
-    // conjunct reduces to `doomed`, so the rewritten rows are
-    // identical to the plain form's). A missing meta (legacy target)
-    // or an unparseable one (torn write) falls back to the plain
-    // store-wide predicate — always correct, just unpruned.
-    val shinglesDoomed = BucketMeta.read(s, target) match {
-      case Some(b) =>
-        val named = flagged.map(java.lang.Math.floorMod(_, b)).distinct
-        col("bucket").isin(named: _*) && doomed
-      case None => doomed
+    BucketStore.scrubbing(s, target, "dupEdges.scrub", flagged, register) {
+      // the doc_id-bucketed stores prune to the flagged ids' buckets
+      val byDoc = BucketStore.doomed(s, target, "doc_id", flagged)
+      graft.sources.PartitionScrub.dropRows(s, s"$target/shingles", "bucket", byDoc)
+      graft.sources.PartitionScrub.dropRows(s, s"$target/sigs", "bucket", byDoc)
+      graft.sources.PartitionScrub.dropRows(s, s"$target/bands", "bucket",
+        col("doc_id").isin(flagged: _*))
+      graft.sources.PartitionScrub.dropRows(s, s"$target/cand", "bucket",
+        col("da").isin(flagged: _*) || col("db").isin(flagged: _*))
+      graft.sources.PartitionScrub.dropRows(s, s"$target/edges", "bucket",
+        col("doc_a").isin(flagged: _*) || col("doc_b").isin(flagged: _*))
     }
-    graft.sources.PartitionScrub.dropRows(s, s"$target/shingles", "bucket",
-      shinglesDoomed)
-    graft.sources.PartitionScrub.dropRows(s, s"$target/sigs", "bucket",
-      shinglesDoomed)
-    graft.sources.PartitionScrub.dropRows(s, s"$target/bands", "bucket",
-      col("doc_id").isin(flagged: _*))
-    graft.sources.PartitionScrub.dropRows(s, s"$target/cand", "bucket",
-      col("da").isin(flagged: _*) || col("db").isin(flagged: _*))
-    graft.sources.PartitionScrub.dropRows(s, s"$target/edges", "bucket",
-      col("doc_a").isin(flagged: _*) || col("doc_b").isin(flagged: _*))
-   }}
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.LongType
 
 /** The batch/stream index halves MEETING ON DISK (r7 verdict item 4):
   * [[StreamIndex]] maintains the bounded per-term METADATA; this
-  * foreachBatch compaction (StreamMergeSink's idiom) maintains the
+  * foreachBatch compaction (a [[BucketStore]] family) maintains the
   * SERVE artifacts — the full postings (doc_id, t, tf) and doc-length
   * frames in exactly the shape q153's scorer reads — so a long-running
   * ingest keeps a live index that `CurationQueries.bm25Over` serves
@@ -32,127 +32,63 @@ import org.apache.spark.sql.types.LongType
   */
 object StreamIndexCompact {
 
-  /** Merge one batch of (doc_id, text) docs into the index target.
-    * The whole read-modify-write — gate read through compacted-bucket
-    * merge — runs under the target's mutation lease
-    * ([[graft.sources.MutationLease]], r12 ADVICE): unserialized, a
-    * takedown scrub interleaving between this batch's gate read and
-    * its bucket merge could have victim rows re-inserted into
-    * postings/doclens with nothing left to re-scrub them (the per-key
-    * max() merge has no version to outrank them). The lease makes the
-    * single-writer-per-target posture enforced in-JVM AND across
-    * processes; [[graft.sources.TakedownApply.scrubIndex]]/
-    * `scrubIndexLog` take the same lease. */
-  def compactBatch(target: String, buckets: Int)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (batch.isEmpty) return
-    graft.sources.MutationLease.withLease(s, target) {
-      compactLocked(s, target, buckets, batch, batchId)
+  /** Merge one batch of (doc_id, text) docs into the index target
+    * through [[BucketStore.ingest]]: the whole read-modify-write — gate
+    * read through compacted-bucket merge — runs under the target's
+    * mutation lease ([[graft.sources.MutationLease]], r12 ADVICE), so a
+    * takedown scrub cannot interleave between this batch's gate read and
+    * its bucket merge and leave victim rows re-inserted into
+    * postings/doclens (the per-key max() merge has no version to
+    * outrank them); [[graft.sources.TakedownApply.scrubIndex]]/
+    * `scrubIndexLog` take the same lease. The replay gate drops the
+    * ids a scrub already erased from a replayed batch at entry, which
+    * covers every write below. */
+  def compactBatch(target: String, buckets: Int)(batch: DataFrame, batchId: Long): Unit =
+    BucketStore.ingest(target, buckets, "doc_id", batch, batchId) { live =>
+      val docs = live
+        .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
+        .withColumn("bucket", pmod(col("doc_id"), lit(buckets.toLong)))
+        .localCheckpoint()
+      val newPostings = docs
+        .select(col("doc_id"), col("bucket"), explode(col("w")).as("t"))
+        .where(col("t") =!= "")
+        .groupBy(col("doc_id"), col("bucket"), col("t"))
+        .agg(count(lit(1)).as("tf"))
+        .localCheckpoint()
+      val newLens = docs
+        .select(col("doc_id"), col("bucket"),
+          size(col("w")).cast(LongType).as("dl"))
+      // per-batch delta log — the index's time-travel half: each batch's
+      // postings/length rows land in their own batch_id partition, so
+      // replay rewrites identical rows and `asOfPostings` can
+      // reconstruct the index as served at ANY historical batch
+      // boundary (relevance-regression debugging: "what did last week's
+      // index score for this query"). LOGS WRITE FIRST (r12 review
+      // finding): the index scrub bounds its replay window by the logs'
+      // batch_id partitions as well as the high-water note (a target
+      // written before the note has only the logs), so every batch that
+      // has touched the compacted buckets must already be visible there. A batch
+      // of blank docs has no postings rows: its postings log and merge
+      // are skipped, never written empty.
+      BucketStore.appendLog(s"$target/log/postings", batchId,
+        newPostings.drop("bucket"), "doc_id")
+      BucketStore.appendLog(s"$target/log/doclens", batchId,
+        newLens.drop("bucket"), "doc_id")
+      def mergeMax(sub: String, incoming: DataFrame, keys: Seq[String],
+                   valueCol: String): Unit =
+        BucketStore.merge(s"$target/$sub", "bucket", incoming)(
+          _.groupBy((col("bucket") +: keys.map(col)): _*)
+            .agg(max(col(valueCol)).as(valueCol))
+            .select(incoming.columns.map(col): _*))
+      mergeMax("postings", newPostings, Seq("doc_id", "t"), "tf")
+      mergeMax("doclens", newLens, Seq("doc_id"), "dl")
     }
-  }
 
-  private def compactLocked(s: org.apache.spark.sql.SparkSession,
-                            target: String, buckets: Int,
-                            batch: DataFrame, batchId: Long): Unit = {
-    // validate-or-publish the target's bucket count ([[BucketMeta]]):
-    // the takedown leg names postings/doclens partitions from it
-    BucketMeta.ensure(s, target, buckets)
-    // replay gate (graft.sources.ScrubRegistry — StreamMergeSink's
-    // rationale): a checkpoint replay of a batch the takedown already
-    // scrubbed would re-insert the victims' rows into BOTH the
-    // compacted buckets (the per-key max() merge has no version to
-    // outrank them) and the batch_id log partitions; dropping the
-    // gated ids at batch entry covers every write below. New batches
-    // pass through — a post-takedown re-add indexes normally. Read
-    // INSIDE the lease: a gate snapshot taken before a concurrent
-    // scrub's registry append would miss its victims.
-    val gated = graft.sources.ScrubRegistry.gatedIds(s, target, batchId)
-    val live =
-      if (gated.isEmpty) batch
-      else batch.where(!col("doc_id").isin(gated: _*))
-    if (live.isEmpty) return
-    val docs = live
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
-      .withColumn("bucket", pmod(col("doc_id"), lit(buckets.toLong)))
-      .localCheckpoint()
-    val newPostings = docs
-      .select(col("doc_id"), col("bucket"), explode(col("w")).as("t"))
-      .where(col("t") =!= "")
-      .groupBy(col("doc_id"), col("bucket"), col("t"))
-      .agg(count(lit(1)).as("tf"))
-    val newLens = docs
-      .select(col("doc_id"), col("bucket"),
-        size(col("w")).cast(LongType).as("dl"))
-    val touched = docs.select(col("bucket")).distinct()
-      .collect().map(_.getLong(0))
-
-    def merge(sub: String, incoming: DataFrame, keys: Seq[String],
-              valueCol: String): Unit = {
-      val path = s"$target/$sub"
-      val tgtPath = new org.apache.hadoop.fs.Path(path)
-      val fs = tgtPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      // existence check, not a catch — StreamMergeSink's r7 discipline
-      val existing =
-        if (!fs.exists(tgtPath)) incoming.limit(0)
-        else s.read.parquet(path).where(col("bucket").isin(touched: _*))
-          .select(incoming.columns.map(col): _*)
-      val groupCols = col("bucket") +: keys.map(col)
-      existing.localCheckpoint()
-        .unionByName(incoming)
-        .groupBy(groupCols: _*)
-        .agg(max(col(valueCol)).as(valueCol))
-        .select(incoming.columns.map(col): _*)
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path)
-    }
-    // per-batch delta log — the index's time-travel half (TimeTravel's
-    // batch_id-partition idiom): each batch's postings/length rows land
-    // in their own partition with dynamic overwrite, so replay rewrites
-    // identical rows and `asOfPostings` can reconstruct the index as
-    // served at ANY historical batch boundary (relevance-regression
-    // debugging: "what did last week's index score for this query").
-    // LOGS WRITE FIRST (r12 review finding): ScrubRegistry derives its
-    // replay window from the on-disk log partitions, so every batch
-    // that has touched the compacted buckets must already be visible in
-    // the logs — log-first ordering makes "buckets mutated but log
-    // absent" impossible, closing the in-flight-crash gap where a
-    // replayed batch would sit above the recorded window and re-insert
-    // scrubbed rows. StreamMergeSink writes its log first for the same
-    // reason.
-    Seq(("log/postings", newPostings.drop("bucket")),
-        ("log/doclens", newLens.drop("bucket"))).foreach { case (sub, df) =>
-      df.withColumn("batch_id", lit(batchId))
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").mode("overwrite")
-        .parquet(s"$target/$sub")
-      // per-batch doc-id bloom for the scrub's partition pruning
-      // (graft.sources.LogBloom)
-      graft.sources.LogBloom.record(s, s"$target/$sub", batchId,
-        df.select(col("doc_id")))
-    }
-    merge("postings", newPostings, Seq("doc_id", "t"), "tf")
-    merge("doclens", newLens, Seq("doc_id"), "dl")
-  }
-
-  /** docs(doc_id, text) stream → continuously compacted index target.
-    * SINGLE LINEAGE PER TARGET ([[LineageEpoch]], r12 ADVICE): the
-    * ScrubRegistry gate keys on batch ids, so the target accepts
-    * batches from exactly one checkpoint lineage — a redeploy with a
-    * fresh checkpoint (ids restart at 0) against this used target
-    * fails loudly here instead of having its new content silently
-    * erased by old scrub windows. Callers invoking [[compactBatch]]
-    * directly own this invariant themselves. */
+  /** docs(doc_id, text) stream → continuously compacted index target,
+    * pinned to one checkpoint lineage ([[BucketStore.start]]). */
   def start(docs: DataFrame, target: String, checkpoint: String,
-            buckets: Int = 16): StreamingQuery = {
-    LineageEpoch.ensure(docs.sparkSession, target, checkpoint)
-    docs.writeStream
-      .foreachBatch(compactBatch(target, buckets) _)
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+            buckets: Int = 16): StreamingQuery =
+    BucketStore.start(docs, checkpoint, Some(target))(compactBatch(target, buckets) _)
 
   /** The compacted artifacts in the exact frames bm25Over consumes. */
   def postings(s: org.apache.spark.sql.SparkSession, target: String): DataFrame =

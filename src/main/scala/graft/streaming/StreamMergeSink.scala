@@ -16,8 +16,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * replacing; a table format's transaction log does this atomically at
   * scale), merge per key by highest version (q122's max(struct)
   * arg-max), and rewrite just those buckets with DYNAMIC partition
-  * overwrite (IdempotentSinkSpec's idiom, set per-write so no session
-  * state leaks). Tombstones ('D') are KEPT as rows, not deleted —
+  * overwrite ([[BucketStore.merge]]). Tombstones ('D') are KEPT as rows, not deleted —
   * that is what makes replay and out-of-order delivery safe: a late v1
   * for a deleted key loses to the v3 tombstone by version comparison,
   * where physical deletion would resurrect it. [[liveView]] is the
@@ -72,48 +71,19 @@ object StreamMergeSink {
             when(hit, lit("D")).otherwise(col("op")).as("op"),
             when(hit, lit("")).otherwise(col("text")).as("text"))
         }
-      logRows.withColumn("batch_id", lit(batchId))
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").mode("overwrite").parquet(lp)
-      // per-batch doc-id bloom: the takedown scrub's partition-pruning
-      // certificate (graft.sources.LogBloom — deep-history logs stop
-      // paying full-store discovery per takedown)
-      graft.sources.LogBloom.record(s, lp, batchId,
-        incoming.select(col("docId")))
+      // the per-batch doc-id bloom is the takedown scrub's
+      // partition-pruning certificate (graft.sources.LogBloom)
+      BucketStore.appendLog(lp, batchId, logRows, "docId")
     }}
-    val touched = incoming.select(col("bucket")).distinct()
-      .collect().map(_.getLong(0))
-    // first-batch detection is a HAS-DATA check, not a catch (r7
-    // verdict item 7): a genuine analysis error on a present target —
-    // schema drift, corrupted footer — must fail the batch loudly, not
-    // silently re-initialize the table from one batch's rows. Has-data,
-    // not exists: the mutation lease / lineage files create the
-    // directory before any parquet lands in it — so ONLY `_`/`.`
-    // harness files read as "no table yet"; anything else (bucket
-    // dirs, even a corrupt stray file) takes the read path and fails
-    // loudly there if unreadable.
-    val tgtPath = new org.apache.hadoop.fs.Path(target)
-    val fs = tgtPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(tgtPath) && fs.listStatus(tgtPath).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    val existing =
-      if (!hasData) incoming.limit(0)
-      else s.read.parquet(target).where(col("bucket").isin(touched: _*))
-        .select(col("docId"), col("ver"), col("op"), col("text"), col("bucket"))
-    // eager: materialize the old bucket contents BEFORE overwriting them
-    val merged = existing.localCheckpoint()
-      .unionByName(incoming)
-      .groupBy(col("docId"), col("bucket"))
-      .agg(max(struct(col("ver"), col("op"), col("text"))).as("m"))
-      .select(col("docId"), col("m.ver").as("ver"), col("m.op").as("op"),
-        col("m.text").as("text"), col("bucket"))
-    merged.write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .mode("overwrite")
-      .parquet(target)
+    // first-batch detection is BucketStore's HAS-DATA rule, not a catch
+    // (r7 verdict item 7): a genuine analysis error on a present target
+    // — schema drift, corrupted footer — fails the batch loudly instead
+    // of silently re-initializing the table from one batch's rows
+    BucketStore.merge(target, "bucket", incoming)(
+      _.groupBy(col("docId"), col("bucket"))
+        .agg(max(struct(col("ver"), col("op"), col("text"))).as("m"))
+        .select(col("docId"), col("m.ver").as("ver"), col("m.op").as("op"),
+          col("m.text").as("text"), col("bucket")))
     }
   }
 
@@ -128,13 +98,9 @@ object StreamMergeSink {
     * lineage-agnostic. Callers invoking [[mergeBatch]] directly own
     * the single-lineage invariant themselves. */
   def start(changes: DataFrame, target: String, checkpoint: String,
-            buckets: Int = 16, log: Option[String] = None): StreamingQuery = {
-    log.foreach(LineageEpoch.ensure(changes.sparkSession, _, checkpoint))
-    StreamMerge(changes).toDF().writeStream
-      .foreachBatch(mergeBatch(target, buckets, log) _)
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+            buckets: Int = 16, log: Option[String] = None): StreamingQuery =
+    BucketStore.start(StreamMerge(changes).toDF(), checkpoint, log)(
+      mergeBatch(target, buckets, log) _)
 
   /** The merge target as consumers see it: tombstones filtered out. */
   def liveView(s: SparkSession, target: String): DataFrame =

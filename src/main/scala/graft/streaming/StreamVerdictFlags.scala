@@ -39,90 +39,44 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamVerdictFlags {
 
-  /** Merge one batch of (doc_id, lang, source, text) docs. Runs under
-    * the target's mutation lease ([[graft.sources.MutationLease]]) and
-    * behind the [[graft.sources.ScrubRegistry]] replay gate — a
-    * checkpoint replay of a batch the takedown scrub already covered
-    * would re-score the victims and the distinct/min merges would
-    * re-insert their rows (and could steal back a reassigned canonical
-    * slot) with nothing left to re-scrub (r13 self-review finding 4).
-    * New batches pass through: erasure stays retroactive. */
+  /** Merge one batch of (doc_id, lang, source, text) docs through
+    * [[BucketStore.ingest]] — under the target's mutation lease and
+    * behind the replay gate: a checkpoint replay of a batch the
+    * takedown scrub already covered would re-score the victims and the
+    * distinct/min merges would re-insert their rows (and could steal
+    * back a reassigned canonical slot) with nothing left to re-scrub
+    * (r13 self-review finding 4). New batches pass through: erasure
+    * stays retroactive. */
   def compactBatch(target: String, buckets: Int)
-                  (batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (batch.isEmpty) return
-    graft.sources.MutationLease.withLease(s, target) {
-      compactLocked(s, target, buckets, batch, batchId)
+                  (batch: DataFrame, batchId: Long): Unit =
+    BucketStore.ingest(target, buckets, "doc_id", batch, batchId) { live =>
+      val b = lit(buckets.toLong)
+      val rf = graft.queries.TextStatsQueries.verdictRowFlags(live)
+        .localCheckpoint()
+      // per-doc row-local flags: replay rewrites identical rows
+      BucketStore.merge(s"$target/flags", "bucket",
+        rf.withColumn("bucket", pmod(col("doc_id"), b)))(_.distinct())
+      // digest → member doc ids (digest-hash-bucketed): the scrub leg's
+      // locality index — an erased canonical's surviving members are
+      // found in its digest's bucket, never by scanning the flags store
+      BucketStore.merge(s"$target/members", "bucket",
+        rf.select(col("digest"), col("doc_id"))
+          .withColumn("bucket", pmod(xxhash64(col("digest")), b)))(_.distinct())
+      // digest → min(doc_id): the associative canonical state
+      BucketStore.merge(s"$target/canon", "bucket", rf
+        .groupBy(col("digest")).agg(min(col("doc_id")).as("min_doc_id"))
+        .withColumn("bucket", pmod(xxhash64(col("digest")), b)))(
+        _.groupBy(col("bucket"), col("digest"))
+          .agg(min(col("min_doc_id")).as("min_doc_id"))
+          .select(col("digest"), col("min_doc_id"), col("bucket")))
     }
-  }
-
-  private def compactLocked(s: SparkSession, target: String, buckets: Int,
-                            batch0: DataFrame, batchId: Long): Unit = {
-    // high-water note FIRST (BatchHighWater's crash ordering), then
-    // the replay gate
-    BatchHighWater.record(s, target, batchId)
-    val gated = graft.sources.ScrubRegistry.gatedIds(s, target, batchId)
-    val batch =
-      if (gated.isEmpty) batch0
-      else batch0.where(!col("doc_id").isin(gated: _*))
-    if (batch.isEmpty) return
-    // validate-or-publish the target's bucket count ([[BucketMeta]]:
-    // loud on a mismatched restart — rows merged under a new modulus
-    // would sit in buckets the named scrub never visits)
-    BucketMeta.ensure(s, target, buckets)
-    val b = lit(buckets.toLong)
-    val rf = graft.queries.TextStatsQueries.verdictRowFlags(batch)
-      .localCheckpoint()
-
-    def merge(sub: String, incoming: DataFrame)
-             (combine: DataFrame => DataFrame): Unit = {
-      val path = s"$target/$sub"
-      val touched = incoming.select(col("bucket")).distinct()
-        .collect().map(_.getLong(0))
-      if (touched.isEmpty) return
-      val tgtPath = new org.apache.hadoop.fs.Path(path)
-      val fs = tgtPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val existing =
-        if (!fs.exists(tgtPath)) incoming.limit(0)
-        else s.read.parquet(path).where(col("bucket").isin(touched: _*))
-          .select(incoming.columns.map(col): _*)
-      combine(existing.localCheckpoint().unionByName(incoming))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path)
-    }
-
-    // per-doc row-local flags: replay rewrites identical rows
-    merge("flags", rf.withColumn("bucket", pmod(col("doc_id"), b)))(_.distinct())
-    // digest → member doc ids (digest-hash-bucketed): the scrub leg's
-    // locality index — an erased canonical's surviving members are
-    // found in its digest's bucket, never by scanning the flags store
-    merge("members", rf.select(col("digest"), col("doc_id"))
-      .withColumn("bucket", pmod(xxhash64(col("digest")), b)))(_.distinct())
-    // digest → min(doc_id): the associative canonical state
-    merge("canon", rf
-      .groupBy(col("digest")).agg(min(col("doc_id")).as("min_doc_id"))
-      .withColumn("bucket", pmod(xxhash64(col("digest")), b)))(
-      _.groupBy(col("bucket"), col("digest"))
-        .agg(min(col("min_doc_id")).as("min_doc_id"))
-        .select(col("digest"), col("min_doc_id"), col("bucket")))
-  }
 
   /** (doc_id, lang, source, text) stream → continuously maintained
-    * flag stores, checkpointed (restart-safe, replay-idempotent). */
+    * flag stores, checkpointed (restart-safe, replay-idempotent) and
+    * pinned to one checkpoint lineage ([[BucketStore.start]]). */
   def start(docs: DataFrame, target: String, checkpoint: String,
-            buckets: Int = 16): StreamingQuery = {
-    // scrub-gated target → one checkpoint lineage per target
-    // ([[LineageEpoch]]): a fresh checkpoint's batch ids would land
-    // inside old erasure windows
-    LineageEpoch.ensure(docs.sparkSession, target, checkpoint)
-    docs.writeStream
-      .foreachBatch(compactBatch(target, buckets) _)
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+            buckets: Int = 16): StreamingQuery =
+    BucketStore.start(docs, checkpoint, Some(target))(compactBatch(target, buckets) _)
 
   /** The verdict flags over everything ingested so far — the exact
     * frame `buildVerdictFlags` computes over the same corpus:
@@ -182,8 +136,8 @@ object StreamVerdictFlags {
     * store-scan pricing) rather than trusting the caller-passed
     * `buckets` default: a wrong count would name the wrong partitions
     * and flagged rows would silently survive erasure — the exact
-    * failure the meta exists to prevent (StreamDupEdges.scrub and
-    * TakedownApply's legs make the same absent-meta choice). */
+    * failure the meta exists to prevent ([[BucketStore.doomed]] makes
+    * the same absent-meta choice for the other stores). */
   def scrub(s: SparkSession, target: String, flagged: Seq[Long]): Unit =
     scrubSteps(s, target, flagged, abortAfter = Int.MaxValue)
 
@@ -192,22 +146,14 @@ object StreamVerdictFlags {
     * handle for proving a rerun completes from every crash point. */
   private[graft] def scrubSteps(s: SparkSession, target: String,
                                 flagged: Seq[Long], abortAfter: Int): Unit =
-   // the target's mutation lease (cross-process single writer) —
-   // reentrant with an in-JVM merge, excluded against another process's;
-   // scrub side waits out a live holder bounded (ScrubRetry, idempotent)
-   graft.sources.ScrubRetry.retryContended(s"verdictFlags.scrub($target)") {
-   graft.sources.MutationLease.withLease(s, target) {
+   // registry FIRST (BucketStore.scrubbing), even before the crash-seam
+   // store rewrites: once recorded, a checkpoint replay of any pre-scrub
+   // batch drops the victims at merge entry — without it the replay
+   // re-scores them into flags/members and can steal back a reassigned
+   // canonical slot, with nothing left to re-scrub.
+   BucketStore.scrubbing(s, target, "verdictFlags.scrub", flagged) {
     val flagsPath = s"$target/flags"
-    val p = new org.apache.hadoop.fs.Path(flagsPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) || flagged.isEmpty) return
-    // registry FIRST, even before the crash-seam store rewrites
-    // (TakedownApply's ordering): once recorded, a checkpoint replay of
-    // any pre-scrub batch drops the victims at merge entry — without it
-    // the replay re-scores them into flags/members and can steal back a
-    // reassigned canonical slot, with nothing left to re-scrub.
-    graft.sources.ScrubRegistry.append(s, target, flagged,
-      BatchHighWater.uptoForScrub(s, target))
+    if (!BucketStore.hasData(s, flagsPath)) return
     val doomed = col("doc_id").isin(flagged: _*)
     BucketMeta.read(s, target) match {
       case Some(b) =>
@@ -271,5 +217,5 @@ object StreamVerdictFlags {
         graft.sources.PartitionScrub.rewriteTouched(s, flagsPath, "bucket",
           doomed)(_.where(!doomed))
     }
-  }}
+  }
 }

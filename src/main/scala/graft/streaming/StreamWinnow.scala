@@ -13,7 +13,7 @@ import graft.queries.AnalyticsQueries
   * twin — a curation dashboard reads dup pressure over everything
   * ingested SO FAR without waiting for the nightly artifact rebuild.
   *
-  * Per micro-batch (foreachBatch compactor, the StreamDupEdges idiom):
+  * Per micro-batch (foreachBatch compactor, a [[BucketStore]] family):
   *  1. the batch's docs winnow through the IDENTICAL doc-local plan
   *     fragment the batch artifact builds with
   *     ([[AnalyticsQueries.winnowSelFor]]: k-gram h60 % 2⁴⁰, PosPack,
@@ -38,104 +38,42 @@ import graft.queries.AnalyticsQueries
 object StreamWinnow {
 
   /** Merge one batch of (doc_id, text) docs into the fingerprint
-    * target. Runs under the target's mutation lease (no interleave
-    * with a takedown scrub in another JVM) and behind the
-    * [[graft.sources.ScrubRegistry]] replay gate: a checkpoint replay
-    * of a batch an erasure pass already covered must not resurrect the
-    * victims' fingerprints (batches above the recorded high-water pass
-    * through — erasure stays retroactive, never prospective). */
+    * target through [[BucketStore.ingest]] — under the target's mutation
+    * lease (no interleave with a takedown scrub in another JVM) and
+    * behind the replay gate: a checkpoint replay of a batch an erasure
+    * pass already covered must not resurrect the victims' fingerprints.
+    * An all-short batch selects zero fingerprints; its empty merge is a
+    * no-op. */
   def compactBatch(target: String, buckets: Int)
-                  (batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (batch.isEmpty) return
-    graft.sources.MutationLease.withLease(s, target) {
-      compactLocked(s, target, buckets, batch, batchId)
+                  (batch: DataFrame, batchId: Long): Unit =
+    BucketStore.ingest(target, buckets, "doc_id", batch, batchId) { live =>
+      val docs = live.select(col("doc_id"), col("text")).localCheckpoint()
+      val bucket = pmod(col("doc_id"), lit(buckets.toLong))
+      // 1+2. the selection — the batch artifact's exact plan fragment
+      BucketStore.merge(s"$target/fps", "bucket",
+        AnalyticsQueries.winnowSelFor(docs).withColumn("bucket", bucket))(_.distinct())
+      // 3. gram denominators (doc-local, replay rewrites identical rows)
+      BucketStore.merge(s"$target/lens", "bucket",
+        AnalyticsQueries.winnowGramsFor(docs).withColumn("bucket", bucket))(_.distinct())
     }
-  }
-
-  private def compactLocked(s: SparkSession, target: String, buckets: Int,
-                            batch0: DataFrame, batchId: Long): Unit = {
-    val b = lit(buckets.toLong)
-    // high-water note FIRST (BatchHighWater's crash ordering), then
-    // the replay gate
-    BatchHighWater.record(s, target, batchId)
-    val gated = graft.sources.ScrubRegistry.gatedIds(s, target, batchId)
-    val batch =
-      if (gated.isEmpty) batch0
-      else batch0.where(!col("doc_id").isin(gated: _*))
-    if (batch.isEmpty) return
-    val docs = batch.select(col("doc_id"), col("text")).localCheckpoint()
-
-    BucketMeta.ensure(s, target, buckets)
-
-    def mergeDistinct(sub: String, incoming: DataFrame): Unit = {
-      val path = s"$target/$sub"
-      val touched = incoming.select(col("bucket")).distinct()
-        .collect().map(_.getLong(0))
-      // an all-short batch selects zero fingerprints: writing the
-      // empty frame would seed the store as a parquet-less
-      // _SUCCESS-only dir poisoning later schema inference — an empty
-      // merge is a no-op whether or not the target exists yet
-      if (touched.isEmpty) return
-      val tgtPath = new org.apache.hadoop.fs.Path(path)
-      val fs = tgtPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val existing =
-        if (!fs.exists(tgtPath)) incoming.limit(0)
-        else s.read.parquet(path).where(col("bucket").isin(touched: _*))
-          .select(incoming.columns.map(col): _*)
-      existing.localCheckpoint()
-        .unionByName(incoming)
-        .distinct()
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path)
-    }
-
-    // 1+2. the selection — the batch artifact's exact plan fragment
-    mergeDistinct("fps", AnalyticsQueries.winnowSelFor(docs)
-      .withColumn("bucket", pmod(col("doc_id"), b)))
-    // 3. gram denominators (doc-local, replay rewrites identical rows)
-    mergeDistinct("lens", AnalyticsQueries.winnowGramsFor(docs)
-      .withColumn("bucket", pmod(col("doc_id"), b)))
-  }
 
   /** (doc_id, text) document stream → continuously maintained winnow
     * fingerprint target, checkpointed (restart-safe,
-    * replay-idempotent). */
+    * replay-idempotent) and pinned to one checkpoint lineage
+    * ([[BucketStore.start]]). */
   def start(docs: DataFrame, target: String, checkpoint: String,
-            buckets: Int = 16): StreamingQuery = {
-    // scrub-gated target → one checkpoint lineage per target
-    // ([[LineageEpoch]]): a fresh checkpoint's batch ids would land
-    // inside old erasure windows
-    LineageEpoch.ensure(docs.sparkSession, target, checkpoint)
-    docs.writeStream
-      .foreachBatch(compactBatch(target, buckets) _)
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
-
-  private def readOrEmpty(s: SparkSession, path: String,
-                          cols: Seq[String]): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      import org.apache.spark.sql.types._
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(cols.map(StructField(_, LongType))))
-    } else s.read.parquet(path).select(cols.map(col): _*)
-  }
+            buckets: Int = 16): StreamingQuery =
+    BucketStore.start(docs, checkpoint, Some(target))(compactBatch(target, buckets) _)
 
   /** The live selection as `winnow_fp_v1` serves it — (doc_id, wmin);
     * a stream that has ingested nothing reads as the empty selection,
     * not an AnalysisException. */
   def selection(s: SparkSession, target: String): DataFrame =
-    readOrEmpty(s, s"$target/fps", Seq("doc_id", "wmin"))
+    BucketStore.readOrEmpty(s, s"$target/fps", Seq("doc_id", "wmin"))
 
   /** The live gram denominators — (doc_id, n_grams). */
   def grams(s: SparkSession, target: String): DataFrame =
-    readOrEmpty(s, s"$target/lens", Seq("doc_id", "n_grams"))
+    BucketStore.readOrEmpty(s, s"$target/lens", Seq("doc_id", "n_grams"))
 
   /** q188's fingerprint board off the LIVE store — identical scorer
     * tail as the batch query, fed by the stream-maintained selection
@@ -153,75 +91,32 @@ object StreamWinnow {
 
   /** Takedown leg: both stores hold content-derived rows of the
     * flagged docs; erasure partition-prunes to the flagged ids'
-    * buckets via the `_buckets` meta (legacy/torn meta falls back to
+    * buckets ([[BucketStore.doomed]] — legacy/torn meta falls back to
     * the unpruned predicate). Idempotent; scrub-side bounded lease
-    * retry ([[graft.sources.ScrubRetry]] — builds stay fail-loud,
-    * stolen leases typed out of the retry). */
+    * retry ([[BucketStore.scrubbing]]). */
   def scrub(s: SparkSession, target: String, flagged: Seq[Long]): Unit =
     scrubImpl(s, target, flagged, register = true)
 
   private def scrubImpl(s: SparkSession, target: String, flagged: Seq[Long],
                         register: Boolean): Unit =
-   graft.sources.ScrubRetry.retryContended(s"winnow.scrub($target)") {
-   graft.sources.MutationLease.withLease(s, target) {
-    // registry FIRST (TakedownApply's crash-safe ordering): with the
-    // erasure window recorded, a checkpoint replay of a covered batch
-    // drops the victims at merge entry instead of resurrecting them
-    if (register)
-      graft.sources.ScrubRegistry.append(s, target, flagged,
-        BatchHighWater.uptoForScrub(s, target))
-    val doomed = col("doc_id").isin(flagged: _*)
-    val pruned = BucketMeta.read(s, target) match {
-      case Some(b) =>
-        val named = flagged.map(java.lang.Math.floorMod(_, b)).distinct
-        col("bucket").isin(named: _*) && doomed
-      case None => doomed
+    BucketStore.scrubbing(s, target, "winnow.scrub", flagged, register) {
+      val doomed = BucketStore.doomed(s, target, "doc_id", flagged)
+      Stores.foreach(sub => graft.sources.PartitionScrub.dropRows(s,
+        s"$target/$sub", "bucket", doomed))
     }
-    graft.sources.PartitionScrub.dropRows(s, s"$target/fps", "bucket", pruned)
-    graft.sources.PartitionScrub.dropRows(s, s"$target/lens", "bucket", pruned)
-   }}
 
-  /** Retention janitor (the StreamDupEdges.janitor posture): evict
-    * docs the upstream already removed — the store's doc set diffed
-    * against the caller's `live` list routes through the scrub leg
-    * WITHOUT the replay registry (eviction, not erasure: a replayed
-    * old batch re-adding an evicted doc is re-evicted by the next
-    * janitor pass, while registering bulk evictions would make every
-    * batch's gate read pay for the janitor's history) — and compact
-    * buckets fragmented past `maxFilesPerBucket` by merge rewrites.
-    * Both passes preserve the served relation exactly; idempotent. */
+  private val Stores = Seq("fps", "lens")
+
+  /** Retention janitor ([[BucketStore.janitor]]): evict docs the
+    * upstream already removed and compact buckets fragmented past
+    * `maxFilesPerBucket` by merge rewrites. Eviction keys on the UNION
+    * of both stores' doc sets: a doc shorter than k+w−1 tokens has a
+    * lens row but selects ZERO fingerprints, so an fps-only diff would
+    * never evict it and the live q188 board would keep serving the
+    * removed doc forever. Both passes preserve the served relation
+    * exactly; idempotent. */
   def janitor(s: SparkSession, target: String, live: DataFrame,
-              maxFilesPerBucket: Int = 4): Unit = {
-    val fpsPath = new org.apache.hadoop.fs.Path(s"$target/fps")
-    val lensPath = new org.apache.hadoop.fs.Path(s"$target/lens")
-    val fs = fpsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(fpsPath) && !fs.exists(lensPath)) return
-    import s.implicits._
-    // eviction keys on the UNION of both stores' doc sets (and runs
-    // if EITHER exists): a doc shorter than k+w−1 tokens has a lens
-    // row but selects ZERO fingerprints, so an fps-only diff would
-    // never evict it and the live q188 board would keep serving the
-    // removed doc forever
-    val held = readOrEmpty(s, s"$target/fps", Seq("doc_id"))
-      .unionByName(readOrEmpty(s, s"$target/lens", Seq("doc_id")))
-      .distinct()
-    val removed = held
-      .join(live.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .as[Long].collect().toSeq
-    if (removed.nonEmpty) scrubImpl(s, target, removed, register = false)
-    Seq("fps", "lens").foreach { sub =>
-      val path = s"$target/$sub"
-      val root = new org.apache.hadoop.fs.Path(path)
-      if (fs.exists(root)) {
-        val frag = fs.listStatus(root).toSeq
-          .filter(_.getPath.getName.startsWith("bucket="))
-          .filter(d => fs.listStatus(d.getPath)
-            .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket)
-          .map(_.getPath.getName.stripPrefix("bucket=").toLong)
-        if (frag.nonEmpty)
-          graft.sources.PartitionScrub.rewriteTouched(s, path, "bucket",
-            col("bucket").isin(frag: _*))(_.repartition(col("bucket")))
-      }
-    }
-  }
+              maxFilesPerBucket: Int = 4): Unit =
+    BucketStore.janitor(s, target, Stores, Stores, live,
+      maxFilesPerBucket)(scrubImpl(s, target, _, register = false))
 }

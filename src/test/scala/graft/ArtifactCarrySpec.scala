@@ -283,6 +283,19 @@ class ArtifactCarrySpec extends SparkSpec {
       "doc 7's rows must survive — it is still in the corpus")
     assert(ArtifactStore.deltaStats.get(ShKey)._2 == 0L,
       s"nothing changed content: ${ArtifactStore.deltaStats.get(ShKey)}")
+    // ...and the certificate no longer holds the deleted file's row for
+    // doc 7, though no data partition was rewritten: it equals a
+    // from-scratch certificate of the corpus
+    def certRows(df: DataFrame) = df
+      .select(col("doc_id"), col("digest").cast("string"), col("src"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    val sidecar = Paths.get(ArtifactStore.root, ShKey,
+      s"fp-${ArtifactStore.documentsFp(spark, dir)}", "docs").toString
+    val fromScratch = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), ArtifactStore.documentsRowDigest.as("digest"),
+        graft.sources.CorpusFiles.srcCol.as("src"))
+    assert(certRows(spark.read.parquet(sidecar)) == certRows(fromScratch),
+      "the docs certificate must equal a from-scratch certificate")
   }
 
   test("a prior generation written under a different bucket modulus " +

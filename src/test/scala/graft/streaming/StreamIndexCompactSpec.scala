@@ -103,4 +103,39 @@ class StreamIndexCompactSpec extends SparkSpec {
       .as[(Long, String, Long)].collect().toSet == prefixPostings(a ++ b),
       "replay corrupted the as-of history")
   }
+
+  test("a batch of blank docs neither fails nor wedges the index stream") {
+    val dir = Files.createTempDirectory("idx_blank").toString
+    val target = s"$dir/index"
+    // no posting rows at all: every log, bloom and merge leg sees an
+    // empty postings frame; the doc lengths still count one empty token
+    val blank: Seq[Doc] = Seq((1000001L, "   "), (1000002L, ""))
+    StreamIndexCompact.compactBatch(target, 4)(blank.toDF("doc_id", "text"), 0L)
+    // a checkpoint replay of the same batch
+    StreamIndexCompact.compactBatch(target, 4)(blank.toDF("doc_id", "text"), 0L)
+    val normal = docs.take(20)
+    assert(normal.forall(_._1 < 1000000L))
+    StreamIndexCompact.compactBatch(target, 4)(normal.toDF("doc_id", "text"), 1L)
+
+    val words = (blank ++ normal).toDF("doc_id", "text")
+      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
+    val expPostings = words
+      .select(col("doc_id"), explode(col("w")).as("t"))
+      .where(col("t") =!= "")
+      .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
+      .as[(Long, String, Long)].collect().toSet
+    val expLens = words
+      .select(col("doc_id"), size(col("w")).cast("long").as("dl"))
+      .as[(Long, Long)].collect().toSet
+    assert(StreamIndexCompact.postings(spark, target)
+      .as[(Long, String, Long)].collect().toSet == expPostings,
+      "postings after a blank batch differ from the batch build")
+    assert(StreamIndexCompact.doclens(spark, target)
+      .as[(Long, Long)].collect().toSet == expLens,
+      "doc lengths after a blank batch differ from the batch build")
+    assert(StreamIndexCompact.asOfPostings(spark, target, 1L)
+      .as[(Long, String, Long)].collect().toSet == expPostings)
+    assert(StreamIndexCompact.asOfDoclens(spark, target, 0L)
+      .as[(Long, Long)].collect().toSet == Set((1000001L, 1L), (1000002L, 1L)))
+  }
 }

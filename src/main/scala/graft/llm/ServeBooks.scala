@@ -794,16 +794,17 @@ object ServeBooks {
     * the directory under a live serve stream kills it, and a
     * mid-stream rebuild would assign cells with a RETRAINED book while
     * the stream probes with its frozen one. Serialized per generation
-    * against the ingest merge ([[withCellsLock]]). */
+    * against the ingest merge on the same lease as [[withCellsLock]]. */
   def scrubAnnCells(s: SparkSession, dir: String, vecIds: Seq[Long]): Unit =
     generationsContaining(s, AnnCellsKey, dir, vecIds,
       annCellsFpsFor(s, dir), vecBytesCol = Some("v")).foreach { fp =>
       val path = ArtifactStore.dataPath(AnnCellsKey, fp)
       // scrub side waits out a live ingest merge / carry build for a
-      // bounded window (ScrubRetry — the leg is idempotent); the merge
-      // and build sides stay fail-loud
-      graft.sources.ScrubRetry.retryContended(s"scrubAnnCells($fp)") {
-      withCellsLock(s, path) {
+      // bounded window (the leg is idempotent) under the generation's
+      // lease; the merge and build sides stay fail-loud. The cells carry
+      // no batch ids, so no erasure window is registered.
+      graft.streaming.BucketStore.scrubbing(s, path, "scrubAnnCells", vecIds,
+          register = false) {
         graft.sources.PartitionScrub.dropRows(s, path, "cell",
           col("vec_id").isin(vecIds: _*))
         // the vecs sidecar must forget the victims too: it is the delta
@@ -823,7 +824,7 @@ object ServeBooks {
           graft.sources.PartitionScrub.dropRows(s, sc.toString, "cell",
             col("vec_id").isin(vecIds: _*))
         else rewriteVecsSidecar(s, path, vecIds)
-      }}
+      }
     }
 
   /** Drop `vecIds` from a generation's vecs carry certificate (no-op

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructTyp
   * `"label,text"` record at the FIRST comma only (`x.split(',', 1)` —
   * `:168`) so commas inside the tweet survive.
   *
-  * Here: Structured Streaming socket source → `from_json` +`explode`
+  * Here: graft's replayable socket line source → `from_json` +`explode`
   * (S2) → 3-arg `split` with limit 2 (S3) → fixed 2-column schema (S4,
   * replacing the reference's infer-then-rename).
   */
@@ -22,10 +22,16 @@ object Ingest {
   val RecordSchema: StructType = StructType(Seq(
     StructField("Label", StringType), StructField("Tweet", StringType)))
 
-  /** S1 — raw socket line stream (non-fault-tolerant, parity with the
-    * reference's unreliable receiver). */
+  /** S1 — raw socket line stream: one `value` string row per line, read
+    * by [[graft.sources.v2.LineSocketStream]]. Each received line is
+    * also written to a segment file under the query's checkpoint, so a
+    * restarted query replays its last logged batch with the same lines.
+    * An offset is the index of the last line taken (`-1` before the
+    * first), and record i of a batch sits in partition
+    * `i mod defaultParallelism`, in order: the layout `randomSplit`
+    * samples over. */
   def socketLines(spark: SparkSession, host: String, port: Int): DataFrame =
-    spark.readStream.format("socket")
+    spark.readStream.format(classOf[graft.sources.v2.LineSocketProvider].getName)
       .option("host", host).option("port", port).load()
 
   /** S2+S3+S4 — decode a JSON-array-of-strings envelope per line and

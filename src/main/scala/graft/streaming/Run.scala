@@ -1,7 +1,7 @@
 package graft.streaming
 
-import java.io.{File, FileOutputStream, ObjectInputStream, ObjectOutputStream, FileInputStream}
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.io.{File, FileInputStream, ObjectInputStream, ObjectOutputStream}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -57,9 +57,16 @@ object Run {
                         var lastBatch: Long = -1L)
     extends Serializable
 
+  /** Replaces the checkpoint at `path` atomically: the state is written
+    * to a temp name in the same dir and renamed over it, so a kill
+    * mid-write leaves the previous checkpoint whole (and a stale temp
+    * file, which the next save overwrites). */
   def saveState(s: TrainState, path: String): Unit = {
-    val out = new ObjectOutputStream(new FileOutputStream(path))
+    val tmp = Paths.get(s"$path.tmp")
+    val out = new ObjectOutputStream(Files.newOutputStream(tmp))
     try out.writeObject(s) finally out.close()
+    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
   def loadState(path: String): Option[TrainState] =
@@ -133,9 +140,8 @@ object Run {
 
   /** Runs `body` on a non-empty micro-batch with its record count,
     * reading the source once: the batch is persisted and counted, and
-    * every later job reads the cache. A re-read costs a full source scan
-    * each time, and the socket source's scan is quadratic in the
-    * partition size. */
+    * every later job reads the cache, so the source scan and the
+    * envelope decode run once per batch. */
   private def readOnce(batch: DataFrame)(body: (DataFrame, Long) => Unit): Unit = {
     val raw = batch.persist()
     try {

@@ -134,22 +134,10 @@ object StreamAnnServe {
     * convention). */
   def radiusRecallAudit(s: SparkSession, dir: String,
                         out: String): DataFrame = {
-    // a loop that has not yet committed a non-empty batch has no
-    // parquet under `out` — the monitor must report zero recall for
-    // the startup window, not throw schema-inference errors (the
-    // BucketStore.readOrEmpty posture)
-    val p = new org.apache.hadoop.fs.Path(out)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val served =
-      if (fs.exists(p) && fs.listStatus(p).exists(
-          _.getPath.getName.endsWith(".parquet")))
-        s.read.parquet(out)
-      else {
-        import org.apache.spark.sql.types._
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("query_id", LongType),
-            StructField("neighbor_id", LongType))))
-      }
+    // a loop that has not yet committed a non-empty batch has written
+    // nothing under `out`: the monitor reports zero recall for the
+    // startup window instead of failing schema inference
+    val served = BucketStore.readOrEmpty(s, out, Seq("query_id", "neighbor_id"))
     graft.queries.SimilarityQueries.radiusRecallOver(
       graft.queries.SimilarityQueries.radiusExactArm(s, dir), served)
   }

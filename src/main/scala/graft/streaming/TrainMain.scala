@@ -12,7 +12,9 @@ import graft.sources.Ingest
   * (`runMain graft.streaming.TrainMain [outDir] [sfDir]`).
   *
   * Swap `Ingest.socketLines(spark, host, port)` for the file source to
-  * run against a live socket exactly like `SGDC/sgdc.py:166`.
+  * run against a live socket like `SGDC/sgdc.py:166`; unlike the
+  * reference's receiver, that source logs each line under the query's
+  * checkpoint, so a restart replays the last logged batch.
   */
 object TrainMain {
   def main(args: Array[String]): Unit = {

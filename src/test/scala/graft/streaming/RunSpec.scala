@@ -171,6 +171,43 @@ class RunSpec extends SparkSpec {
     assert(reloaded.iter == after1.iter && reloaded.bestF1 == after1.bestF1)
   }
 
+  test("model checkpoints are replaced atomically: no temp file is left, a torn one is ignored") {
+    val outDir = Files.createTempDirectory("graft-stream-atomic").toString
+    implicit val sqlCtx = spark.sqlContext
+    val batch = envelope(Seq(("4", "good nice"), ("0", "bad sad"),
+      ("4", "great fine"), ("0", "awful poor")))
+    def temps = Files.list(Paths.get(outDir)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".tmp")).toList
+
+    val s1 = MemoryStream[String]
+    val q1 = Run.trainingStream(Ingest.decodeEnvelope(s1.toDF()), Run.Pa,
+      outDir, tag = "a", stem = false, triggerMs = 50L)
+    try {
+      s1.addData(batch)
+      q1.processAllAvailable()
+    } finally q1.stop()
+    assert(temps.isEmpty, s"temp files left after a run: $temps")
+
+    // what a kill in the middle of both checkpoint writes leaves behind
+    Seq("model_a.bin", "model_bestfsc_a.bin").foreach { f =>
+      Files.write(Paths.get(s"$outDir/$f.tmp"), Array[Byte](-84, -19, 0, 5, 115))
+    }
+    assert(Run.loadState(s"$outDir/model_a.bin").get.iter == 1)
+
+    // a restart on the same dir and checkpoint loads the state, trains
+    // on, and its own writes replace the torn temp files
+    val s2 = MemoryStream[String]
+    val q2 = Run.trainingStream(Ingest.decodeEnvelope(s2.toDF()), Run.Pa,
+      outDir, tag = "a", stem = false, triggerMs = 50L)
+    try {
+      s2.addData(batch) // offset 0, committed by the first run
+      s2.addData(batch)
+      q2.processAllAvailable()
+    } finally q2.stop()
+    assert(Run.loadState(s"$outDir/model_a.bin").get.iter == 2)
+    assert(!temps.contains("model_a.bin.tmp"), s"temp files left after the restart: $temps")
+  }
+
   /** One `["label,text"]` envelope per line, as the socket source gets
     * them; label 4 iff the text mentions "fast", over a vocabulary the
     * stemmer folds (running/runs, happiness/happy, ...). */

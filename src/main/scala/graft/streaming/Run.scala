@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.io.{File, FileInputStream, ObjectInputStream, ObjectOutputStream}
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -61,12 +61,31 @@ object Run {
     * to a temp name in the same dir and renamed over it, so a kill
     * mid-write leaves the previous checkpoint whole (and a stale temp
     * file, which the next save overwrites). */
-  def saveState(s: TrainState, path: String): Unit = {
+  def saveState(s: TrainState, path: String): Unit =
+    replaceAtomically(Paths.get(path)) { tmp =>
+      val out = new ObjectOutputStream(Files.newOutputStream(tmp))
+      try out.writeObject(s) finally out.close()
+    }
+
+  /** Writes `path` through `write` into a temp file renamed over it. */
+  private def replaceAtomically(path: Path)(write: Path => Unit): Unit = {
     val tmp = Paths.get(s"$path.tmp")
-    val out = new ObjectOutputStream(Files.newOutputStream(tmp))
-    try out.writeObject(s) finally out.close()
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
+    write(tmp)
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Cuts a metrics CSV back to its header and the rows whose first field
+    * (the batch's number) is at most `committed`. A kill after a row's
+    * append and before its batch's commit point leaves a row the
+    * restarted query writes again; cutting on start keeps one row per
+    * number. */
+  private def cutCsv(path: Path, committed: Long): Unit = {
+    val lines = Files.readAllLines(path).asScala
+    val kept = lines.take(1) ++ lines.drop(1)
+      .filter(_.takeWhile(_ != ',').toLongOption.exists(_ <= committed))
+    if (kept.size < lines.size)
+      replaceAtomically(path)(Files.writeString(_, kept.map(_ + "\n").mkString))
   }
 
   def loadState(path: String): Option[TrainState] =
@@ -109,15 +128,21 @@ object Run {
     if (!Files.exists(csvPath))
       Files.writeString(csvPath, "batch,f1,acc,precision,recall,n,mse\n")
     // Replay guard: foreachBatch is at-least-once, so persist the last
-    // appended batchId in a sidecar and skip batches at or below it —
-    // a restart never duplicates a CSV row.
+    // appended batchId with its batch number in a sidecar, the commit
+    // point, and skip batches at or below it. A row appended after the
+    // last commit is cut on start, so its replayed batch is written once,
+    // under the same number.
     val lastPath = Paths.get(s"$outDir/infer_$tag.last")
-    var lastBatch =
-      if (Files.exists(lastPath)) Files.readString(lastPath).trim.toLong else -1L
+    val last =
+      if (Files.exists(lastPath)) Files.readString(lastPath).trim.split(',').map(_.toLong)
+      else Array(-1L)
+    var lastBatch = last(0)
     // The CSV survives a restart along with the sidecar, so numbering
-    // resumes after its last row instead of repeating batch numbers.
-    var batchNo = Files.readAllLines(csvPath).asScala.drop(1).lastOption
-      .fold(0L)(_.takeWhile(_ != ',').toLong)
+    // resumes after the committed batch instead of repeating numbers. A
+    // sidecar without a batch number resumes after the CSV's last row.
+    var batchNo = if (last.length > 1) { cutCsv(csvPath, last(1)); last(1) }
+      else Files.readAllLines(csvPath).asScala.drop(1).lastOption
+        .fold(0L)(_.takeWhile(_ != ',').toLong)
     records.writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", s"$outDir/_checkpoint_infer_$tag")
@@ -131,7 +156,7 @@ object Run {
               f"${m.recall}%.6f,$n,${m.mse}%.6f\n",
             StandardOpenOption.APPEND)
           lastBatch = batchId
-          Files.writeString(lastPath, s"$batchId\n")
+          replaceAtomically(lastPath)(Files.writeString(_, s"$batchId,$batchNo\n"))
         }
         ()
       }
@@ -191,6 +216,9 @@ object Run {
 
     val state = loadState(statePath).getOrElse(
       TrainState(freshState(algo), 0L, 0.0))
+    // The state file is the commit point: rows past its `iter` belong to
+    // batches that were never committed and will be replayed.
+    cutCsv(csvPath, state.iter)
 
     records.writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -204,14 +232,9 @@ object Run {
           // `TESTING .py:67`), off by default.
           if (consoleSample) raw.show(5)
           val featurized =
-            if (dynamicLabel) {
-              // the reference's exact T6 pipeline: HashingTF + per-batch
-              // StringIndexer refit, hashing the same column the chain
-              // produced (stemmed when stem=true, matching sgdc.py:64)
-              val toks = Featurize.features(Featurize.cleaned(raw), stem).drop("tf")
-              val tokensCol = if (stem) "stemmed" else "filtered"
-              Featurize.dynamicLabelPipeline(tokensCol).fit(toks).transform(toks)
-            } else Featurize.featurize(raw, stem)
+            if (dynamicLabel)
+              Featurize.withDynamicTarget(Featurize.features(raw, Featurize.kernel(_, stem)))
+            else Featurize.featurize(raw, stem)
           // Featurized once for both splits. The split runs on exactly
           // the chain's columns in the source's partition layout: its
           // within-partition sort over those columns defines the split.

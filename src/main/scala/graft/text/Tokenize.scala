@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * Reference: `Tokenizer` then `StopWordsRemover` in every pipeline
   * (`SGDC/sgdc.py:51-56`, `TESTING .py:52-57`). Both are re-expressed as
-  * builtin column functions so they stay inside whole-stage codegen; the MLlib
-  * wrapper classes are also exercised in `graft.ml.Featurize` for API parity.
+  * builtin column functions so they stay inside whole-stage codegen, for the
+  * text queries. `graft.ml.Featurize` runs neither these nor the MLlib
+  * wrapper classes: its one-pass kernel reads only [[stopWords]].
   */
 object Tokenize {
   /** MLlib's default English stop list — the exact list the reference's

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.SparkSpec
-import graft.ml.{BinaryReference, Featurize, Incremental, Metrics}
+import graft.ml.{BinaryReference, Featurize, FeaturizeReference, Incremental, Metrics}
 import graft.sources.Ingest
 
 class RunSpec extends SparkSpec {
@@ -268,6 +268,143 @@ class RunSpec extends SparkSpec {
     val live = Files.readAllLines(Paths.get(s"$outDir/stats_replay.csv")).asScala.drop(1)
       .map { r => val c = r.split(","); (c.take(2).drop(1) ++ c.drop(3)).mkString(",") }
     assert(live.toSeq == replay)
+  }
+
+  test("live stats CSV and final weights equal a replay through the MLlib reference chain; " +
+    "the kernel runs once per row") {
+    val outDir = Files.createTempDirectory("graft-ref-replay").toString
+    implicit val sqlCtx = spark.sqlContext
+    val par = 2
+    val stream = MemoryStream[String](par)
+    val query = Run.trainingStream(Ingest.decodeEnvelope(stream.toDF()),
+      Run.Pa, outDir, tag = "ref", stem = true, triggerMs = 50L)
+    val rnd = new scala.util.Random(13)
+    val batches = Seq(150, 40, 260, 90).map(recordLines(rnd, _))
+    try for (b <- batches) {
+      stream.addData(b)
+      query.processAllAvailable()
+    } finally query.stop()
+
+    // Replays the batches in the i-mod-2 layout through `featurize`,
+    // returning the CSV rows and the final model. The reference's wider
+    // frame (words_token, filtered, stemmed) must split the same way:
+    // each extra column is a function of Tweet, so randomSplit's
+    // within-partition sort order is unchanged.
+    val schema = StructType(Seq(StructField("value", StringType)))
+    def replay(featurize: DataFrame => DataFrame, afterBatch: Int => Unit) = {
+      val model = new Incremental.LinearModel(Featurize.NumFeatures)
+      var best = 0.0
+      val rows = batches.zipWithIndex.map { case (lines, i) =>
+        val parts = (0 until par).map(p => lines.indices.filter(_ % par == p).map(lines))
+        val rdd = spark.sparkContext.parallelize(parts, par).flatMap(_.map(Row(_)))
+        val featurized = featurize(Ingest.decodeEnvelope(spark.createDataFrame(rdd, schema)))
+          .persist()
+        val Array(train, test) = featurized.randomSplit(Array(0.8, 0.2), seed = 42)
+        Incremental.PassiveAggressive.partialFit(model, train)
+        val m = Metrics.binaryCollect(model.predictCol(test))
+        featurized.unpersist()
+        afterBatch(lines.size)
+        val row = f"${i + 1},${m.f1}%.6f,${math.max(best, m.f1)}%.6f,${m.accuracy}%.6f," +
+          f"${m.precision}%.6f,${m.recall}%.6f,${lines.size},${m.mse}%.6f"
+        best = math.max(best, m.f1)
+        row
+      }
+      (rows, model)
+    }
+    val live = Files.readAllLines(Paths.get(s"$outDir/stats_ref.csv")).asScala.drop(1).toSeq
+    val liveModel = Run.loadState(s"$outDir/model_ref.bin").get.model
+      .asInstanceOf[Run.LinearState].m
+    def bits(m: Incremental.LinearModel) =
+      (m.w.toSeq :+ m.b).map(java.lang.Double.doubleToRawLongBits)
+
+    val (refRows, refModel) = replay(FeaturizeReference.featurize(_, stem = true), _ => ())
+    assert(live == refRows)
+    assert(bits(liveModel) == bits(refModel))
+
+    // the same replay through the kernel, counting its calls: featurize
+    // → persist → split → fit → metrics runs it once per record
+    val calls = spark.sparkContext.longAccumulator("kernel")
+    var sent = 0L
+    val (kernelRows, kernelModel) = replay(
+      b => Featurize.withTarget(Featurize.features(b,
+        t => { calls.add(1); Featurize.kernel(t, stem = true) })),
+      n => {
+        sent += n
+        assert(calls.value == sent, s"${calls.value} kernel calls for $sent records")
+      })
+    assert(kernelRows == refRows && bits(kernelModel) == bits(refModel))
+  }
+
+  test("a training restart cuts the CSV row of an uncommitted batch; one row per iter") {
+    val outDir = Files.createTempDirectory("graft-csv-window").toString
+    implicit val sqlCtx = spark.sqlContext
+    val rnd = new scala.util.Random(17)
+    val (b1, b2) = (recordLines(rnd, 60), recordLines(rnd, 60))
+    val s1 = MemoryStream[String]
+    val q1 = Run.trainingStream(Ingest.decodeEnvelope(s1.toDF()), Run.Pa,
+      outDir, tag = "w", stem = true, triggerMs = 50L)
+    try {
+      s1.addData(b1)
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val csvPath = Paths.get(s"$outDir/stats_w.csv")
+    // a kill after the second batch's CSV append, before its state save
+    Files.writeString(csvPath, "2,0.5,0.5,0.5,0.5,0.5,60,0.5\n",
+      java.nio.file.StandardOpenOption.APPEND)
+
+    val s2 = MemoryStream[String]
+    val q2 = Run.trainingStream(Ingest.decodeEnvelope(s2.toDF()), Run.Pa,
+      outDir, tag = "w", stem = true, triggerMs = 50L)
+    try {
+      s2.addData(b1) // offset 0, committed by the first run
+      s2.addData(b2) // the replayed batch
+      q2.processAllAvailable()
+    } finally q2.stop()
+    val rows = Files.readAllLines(csvPath).asScala.drop(1)
+    assert(rows.map(_.split(",")(0).toLong) == Seq(1L, 2L), rows)
+    assert(rows(1) != "2,0.5,0.5,0.5,0.5,0.5,60,0.5", rows)
+    assert(Run.loadState(s"$outDir/model_w.bin").get.iter == 2)
+    assert(!Files.exists(Paths.get(s"$csvPath.tmp")))
+  }
+
+  test("an inference restart cuts the CSV row of an uncommitted batch; one row per batch") {
+    val outDir = Files.createTempDirectory("graft-infer-window").toString
+    implicit val sqlCtx = spark.sqlContext
+    val trainStream = MemoryStream[String]
+    val tq = Run.trainingStream(Ingest.decodeEnvelope(trainStream.toDF()), Run.Pa,
+      outDir, tag = "frozen", stem = false, triggerMs = 50L)
+    try {
+      trainStream.addData(envelope((1 to 40).map(i =>
+        if (i % 2 == 0) ("4", "good great nice fine") else ("0", "bad awful sad poor"))))
+      tq.processAllAvailable()
+    } finally tq.stop()
+
+    val stream = MemoryStream[String]
+    def runOnce(recs: Seq[(String, String)]): Unit = {
+      val q = Run.inferenceStream(Ingest.decodeEnvelope(stream.toDF()),
+        s"$outDir/model_frozen.bin", outDir, tag = "w", stem = false, triggerMs = 50L)
+      try {
+        stream.addData(envelope(recs))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    runOnce(Seq(("4", "good great"), ("0", "bad awful")))
+    val csvPath = Paths.get(s"$outDir/infer_w.csv")
+    assert(Files.readString(Paths.get(s"$outDir/infer_w.last")).trim == "0,1")
+    // a kill after the next batch's CSV append, before its sidecar write
+    Files.writeString(csvPath, "2,0.5,0.5,0.5,0.5,3,0.5\n",
+      java.nio.file.StandardOpenOption.APPEND)
+    runOnce(Seq(("4", "nice fine"), ("0", "sad poor"), ("4", "great")))
+    val rows = Files.readAllLines(csvPath).asScala.drop(1)
+    assert(rows.map(_.split(",")(0).toLong) == Seq(1L, 2L), rows)
+    assert(rows.map(_.split(",")(5).toLong) == Seq(2L, 3L), rows)
+    assert(rows(1).split(",")(2).toDouble == 1.0, rows)
+
+    // an old single-number sidecar resumes after the CSV's last row
+    Files.writeString(Paths.get(s"$outDir/infer_w.last"), "1\n")
+    runOnce(Seq(("0", "awful")))
+    val after = Files.readAllLines(csvPath).asScala.drop(1)
+    assert(after.map(_.split(",")(0).toLong) == Seq(1L, 2L, 3L), after)
   }
 
   test("inference decodes each record once per micro-batch") {

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.functions.{col, explode, lower, split}
 
 import graft.SparkSpec
-import graft.ml.Featurize
+import graft.ml.FeaturizeReference
 
 /** Differential spec: the buffer-based `Porter2.stem` against
   * [[Porter2Reference]], the straightforward implementation it replaced.
@@ -88,8 +88,8 @@ class Porter2DiffSpec extends SparkSpec {
     // raw whitespace tokens (punctuation and apostrophes kept) and the
     // featurize chain's own tokens
     val raw = docs.select(explode(split(lower(col("text")), "\\s+")).as("t"))
-    val chain = Featurize.features(
-      Featurize.cleaned(docs.select(col("text").as("Tweet"))), stem = false)
+    val chain = FeaturizeReference.features(
+      FeaturizeReference.cleaned(docs.select(col("text").as("Tweet"))), stem = false)
       .select(explode(col("words_token")).as("t"))
     val tokens = raw.union(chain).distinct().collect().map(_.getString(0)).toSeq
     assert(tokens.nonEmpty)
